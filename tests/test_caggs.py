@@ -288,6 +288,18 @@ def _hrows(day, hours, key="a"):
     ]
 
 
+def _levels(spark, root):
+    hourly = ContinuousAggregate(
+        spark, str(root / "h"), "1 hour", "ts", ["k"],
+        _hourly_partial_aggs,
+    )
+    daily = ContinuousAggregate(
+        spark, str(root / "d"), "1 day", "bucket", ["k"],
+        _daily_merge_aggs,
+    )
+    return [hourly, daily]
+
+
 @pytest.fixture()
 def hierarchy(spark, tmp_path):
     from timescale_cdc_spark.cdc.caggs import (
@@ -295,18 +307,10 @@ def hierarchy(spark, tmp_path):
         query_hierarchy,
     )
 
-    hourly = ContinuousAggregate(
-        spark, str(tmp_path / "h"), "1 hour", "ts", ["k"],
-        _hourly_partial_aggs,
-    )
-    daily = ContinuousAggregate(
-        spark, str(tmp_path / "d"), "1 day", "bucket", ["k"],
-        _daily_merge_aggs,
-    )
-    return [hourly, daily], cascade_refresh, query_hierarchy
+    return _levels(spark, tmp_path), cascade_refresh, query_hierarchy
 
 
-def test_hierarchy_cascade_equals_direct(spark, hierarchy):
+def test_hierarchy_cascade_equals_direct(spark, tmp_path, hierarchy):
     levels, cascade, qh = hierarchy
     # data ends at 23:30 -> the hourly watermark reaches the day-3
     # boundary, so BOTH days are complete and materialize at the top
@@ -314,6 +318,15 @@ def test_hierarchy_cascade_equals_direct(spark, hierarchy):
         _hrows(1, [0, 1, 5]) + _hrows(2, [22, 23], key="b"), HSCHEMA
     )
     cascade(levels, src)
+    # the hourly level stores its own types, not the daily level's
+    # widened ones (sum(decimal(18,2)) is decimal(28,2) at the hour,
+    # decimal(38,2) at the day)
+    single = ContinuousAggregate(
+        spark, str(tmp_path / "single"), "1 hour", "ts", ["k"],
+        _hourly_partial_aggs,
+    )
+    single.refresh(src)
+    assert levels[0].materialized().dtypes == single.materialized().dtypes
     assert _readable(levels[1].materialized()) == _readable(
         _daily_direct(src)
     )
@@ -404,50 +417,110 @@ def test_align_down_up_public_helpers(spark, tmp_path):
     assert day.align_down(1704844800) == 1704844800
 
 
-def test_fused_initial_cascade_matches_sequential(spark, tmp_path):
-    """Round 16 (VERDICT r15 #4): the fused single-staging-tree
-    initial cascade commit must be byte-for-byte equivalent to the
-    sequential write->commit->re-read->write path — same materialized
-    rows, same manifest watermarks/regions, same real-time view — and
-    must actually ENGAGE on fresh two-level hierarchies (returns
-    True), while incremental refreshes fall back (returns False).
-    Crash windows are covered by soak_cagg_fused.py (5 kill points,
-    all green; SCALE.md)."""
-    from timescale_cdc_spark.cdc import caggs as C
-
+def test_cascade_never_rewinds_a_committed_watermark(spark, hierarchy):
+    """A refresh over a window with no rows commits a manifest with a
+    far watermark and zero regions. A later cascade over the data is a
+    normal next generation: the watermark only moves forward."""
+    levels, cascade, qh = hierarchy
+    hourly = levels[0]
     src = spark.createDataFrame(
         _hrows(1, [0, 1, 5]) + _hrows(2, [3, 22, 23], key="b"), HSCHEMA
     )
+    far = 1706745600  # 2024-02-01T00:00Z, past every source row
+    hourly.refresh(src, start_s=far - 3600, end_s=far)
+    assert hourly._load_manifest()["version"] == 1
+    assert hourly._load_manifest()["regions"] == {}
+    cascade(levels, src, start_s=0, end_s=1704326400)  # through Jan 3
+    man = hourly._load_manifest()
+    assert man["watermark_s"] == far
+    assert man["version"] == 2
+    assert _readable(qh(levels, src)) == _readable(_daily_direct(src))
 
-    def mk(tag):
-        hour = ContinuousAggregate(
-            spark, str(tmp_path / tag / "h"), "1 hour", "ts", ["k"],
-            _hourly_partial_aggs,
-        )
-        day = ContinuousAggregate(
-            spark, str(tmp_path / tag / "d"), "1 day", "bucket", ["k"],
-            _daily_merge_aggs,
-        )
-        return hour, day
 
-    end_s = 1704326400  # 2024-01-04T00:00Z — covers both data days
-    hf, df_ = mk("fused")
-    assert C._cascade_initial_fused([hf, df_], src, 0, end_s) is True
-    hs, ds = mk("seq")
-    hs.refresh(src, start_s=0, end_s=end_s)
-    ds.refresh(hs.materialized(), start_s=0, end_s=end_s)
-    for a, b in ((hf, hs), (df_, ds)):
+def _fail_upper_commit_once(monkeypatch, upper):
+    """Make the upper level's next manifest commit raise: the cascade
+    stops after the lower level committed and before the upper did."""
+    commit = upper._commit_manifest
+    calls = []
+
+    def crash_once(manifest):
+        calls.append(manifest)
+        if len(calls) == 1:
+            raise RuntimeError("crash between level commits")
+        commit(manifest)
+
+    monkeypatch.setattr(upper, "_commit_manifest", crash_once)
+    return calls
+
+
+def _assert_manifests_intact(levels):
+    for cagg in levels:
+        if not cagg.exists():
+            continue
+        with open(cagg._manifest_path()) as f:
+            man = json.load(f)  # a torn manifest would not parse
+        assert set(man) == {"version", "watermark_s", "regions", "history"}
+        for src in (man["regions"], man["history"]):
+            for day, v in src.items():
+                assert os.listdir(os.path.join(cagg.path, f"d={day}", v))
+
+
+def test_cascade_crash_between_level_commits_fresh(
+    spark, monkeypatch, hierarchy
+):
+    """A fresh cascade crashes after the hourly commit: the daily
+    level has no manifest yet, the hierarchy view stays exact, and
+    re-running the cascade completes it."""
+    levels, cascade, qh = hierarchy
+    hourly, daily = levels
+    src = spark.createDataFrame(
+        _hrows(1, [0, 1, 5]) + _hrows(2, [22, 23], key="b"), HSCHEMA
+    )
+    calls = _fail_upper_commit_once(monkeypatch, daily)
+    with pytest.raises(RuntimeError, match="crash between level commits"):
+        cascade(levels, src)
+    assert hourly.exists() and not daily.exists()
+    _assert_manifests_intact(levels)
+    # the daily level serves everything from its real-time tail
+    assert _readable(qh(levels, src)) == _readable(_daily_direct(src))
+    # re-running the cascade completes the upper level
+    cascade(levels, src)
+    assert len(calls) == 2
+    _assert_manifests_intact(levels)
+    assert _readable(daily.materialized()) == _readable(_daily_direct(src))
+    assert _readable(qh(levels, src)) == _readable(_daily_direct(src))
+
+
+def test_cascade_crash_between_level_commits_backfill(
+    spark, tmp_path, monkeypatch
+):
+    """A backfill into a warm hierarchy crashes after the hourly
+    commit; re-running the same cascade matches a control that never
+    crashed."""
+    from timescale_cdc_spark.cdc.caggs import cascade_refresh, query_hierarchy
+
+    d1 = spark.createDataFrame(_hrows(1, [0, 5]) + _hrows(3, [2]), HSCHEMA)
+    d2 = d1.unionByName(
+        spark.createDataFrame(_hrows(1, [1], key="b"), HSCHEMA)
+    )
+    lo = int(dt.datetime(2024, 1, 1, 1, tzinfo=dt.timezone.utc).timestamp())
+    crashed = _levels(spark, tmp_path / "crashed")
+    control = _levels(spark, tmp_path / "control")
+    for levels in (crashed, control):
+        cascade_refresh(levels, d1)
+    _fail_upper_commit_once(monkeypatch, crashed[1])
+    with pytest.raises(RuntimeError, match="crash between level commits"):
+        cascade_refresh(crashed, d2, start_s=lo, end_s=lo + 3600)
+    _assert_manifests_intact(crashed)
+    for levels in (crashed, control):
+        cascade_refresh(levels, d2, start_s=lo, end_s=lo + 3600)
+    _assert_manifests_intact(crashed)
+    for a, b in zip(crashed, control):
         assert a.watermark_s() == b.watermark_s()
-        ma = a._load_manifest()
-        mb = b._load_manifest()
-        assert sorted(ma["regions"]) == sorted(mb["regions"])
-        da, db = a.materialized(), b.materialized()
-        assert da.exceptAll(db).count() == 0
-        assert db.exceptAll(da).count() == 0
-    # real-time hierarchy view identical
-    qa = df_.query(hf.query(src))
-    qb = ds.query(hs.query(src))
-    assert qa.exceptAll(qb).count() == 0
-    assert qb.exceptAll(qa).count() == 0
-    # incremental state must NOT take the fused path
-    assert C._cascade_initial_fused([hf, df_], src, 0, end_s) is False
+        assert sorted(a._load_manifest()["regions"]) == sorted(
+            b._load_manifest()["regions"]
+        )
+        assert _readable(a.materialized()) == _readable(b.materialized())
+    assert _readable(query_hierarchy(crashed, d2)) == _readable(
+        _daily_direct(d2)
+    )

@@ -157,6 +157,16 @@ class ContinuousAggregate:
         counterpart of :meth:`align_down`)."""
         return self._align(epoch_s, up=True)
 
+    def _span(self, df: DataFrame) -> tuple[int, int] | None:
+        """``[first bucket start, last bucket end)`` of ``df``'s rows
+        (one min/max aggregation job); None when ``df`` is empty."""
+        lo, hi = (
+            df.select(self._eb().alias("_e"))
+            .agg(F.min("_e"), F.max("_e"))
+            .first()
+        )
+        return None if lo is None else (lo, hi + self.secs)
+
     # -- refresh ------------------------------------------------------
 
     def refresh(
@@ -164,7 +174,7 @@ class ContinuousAggregate:
         source: DataFrame,
         start_s: int | None = None,
         end_s: int | None = None,
-    ) -> None:
+    ) -> tuple[int, int] | None:
         """Recompute the buckets whose start lies in the bucket-aligned
         ``[start_s, end_s)`` window (epoch seconds; defaults = the
         source's full observed range) and commit them atomically.
@@ -173,24 +183,22 @@ class ContinuousAggregate:
         every other region's directories are carried forward in the
         manifest untouched. Idempotent: re-refreshing the same window
         with the same source replaces those regions with identical
-        content.
+        content. Returns the aligned window it committed, or None when
+        there was nothing to refresh.
         """
         if start_s is None or end_s is None:
-            lo, hi = (
-                source.select(self._eb().alias("_e"))
-                .agg(F.min("_e"), F.max("_e"))
-                .first()
-            )
-            if lo is None:
-                return  # empty source, nothing to refresh
-            start_s = lo if start_s is None else start_s
-            end_s = (hi + self.secs) if end_s is None else end_s
+            span = self._span(source)
+            if span is None:
+                return None  # empty source, nothing to refresh
+            start_s = span[0] if start_s is None else start_s
+            end_s = span[1] if end_s is None else end_s
         start_s = self._align(start_s)
         end_s = self._align(end_s, up=True)
         if end_s <= start_s:
-            return
+            return None
 
         manifest = self._load_manifest()
+        prev = manifest["regions"]
         gen = manifest["version"] + 1
         vname = f"v_{gen:06d}"
 
@@ -206,7 +214,6 @@ class ContinuousAggregate:
         # carry that day's out-of-window buckets forward into the new
         # region version (otherwise they'd vanish with the superseded
         # directory). Cost stays O(touched day regions).
-        prev = self._load_manifest()["regions"]
         touched = [
             d for d in prev if self._day_in_window(d, start_s, end_s)
         ]
@@ -234,10 +241,9 @@ class ContinuousAggregate:
         # Move each staged day region to its committed location. Days
         # inside the window with NO staged output (all their rows
         # deleted / none existed) drop out of the manifest.
-        prev_regions = dict(manifest["regions"])
         new_regions = {
             d: v
-            for d, v in prev_regions.items()
+            for d, v in prev.items()
             if not self._day_in_window(d, start_s, end_s)
         }
         if os.path.exists(staging):
@@ -267,10 +273,11 @@ class ContinuousAggregate:
                 # previous generation's mapping, so a reader that
                 # resolved paths just before this commit keeps every
                 # directory it captured
-                "history": prev_regions,
+                "history": prev,
             }
         )
         self._gc()
+        return start_s, end_s
 
     def _day_in_window(self, day: str, start_s: int, end_s: int) -> bool:
         import datetime as dt
@@ -333,15 +340,9 @@ class ContinuousAggregate:
         batch carrying late rows automatically widens the window back
         to the oldest touched bucket — the invalidation semantics,
         derived from the data instead of a trigger-maintained log."""
-        bounds = (
-            batch_df.select(self._eb().alias("_e"))
-            .agg(F.min("_e").alias("lo"), F.max("_e").alias("hi"))
-            .first()
-        )
-        if bounds["lo"] is None:
-            return
-        self.refresh(source, start_s=bounds["lo"],
-                     end_s=bounds["hi"] + self.secs)
+        span = self._span(batch_df)
+        if span is not None:
+            self.refresh(source, *span)
 
     def attach(self, stream: DataFrame, source_path: str, checkpoint: str):
         """Wire the aggregate into a stream: each micro-batch lands in
@@ -402,10 +403,12 @@ def cascade_refresh(
     """Refresh a hierarchy of continuous aggregates — each level
     sourced from the one below it (Timescale 2.9 hierarchical caggs:
     an hourly cagg over the facts, a daily cagg over the hourly one,
-    ...). ``levels[0]`` refreshes from ``source``; ``levels[i]``
-    refreshes from ``levels[i-1].materialized()``, with the window
-    widened to each level's bucket alignment so every recomputed
-    coarse bucket reads a complete span of fine buckets.
+    ...). ``levels[0]`` refreshes from ``source`` over ``[start_s,
+    end_s)`` (defaults = the source's observed range); ``levels[i]``
+    refreshes from ``levels[i-1].materialized()`` over the window the
+    level below committed, widened to its own bucket alignment so
+    every recomputed coarse bucket reads a complete span of fine
+    buckets. Fresh and incremental hierarchies take the same path.
 
     Each level's width must be an integer multiple of the previous
     level's, and each upper level's ``ts_col`` must be the lower
@@ -423,6 +426,15 @@ def cascade_refresh(
     watermark, hiding data that arrives later in the same bucket
     until the next cascade.
 
+    Crash contract: every level commits through its own
+    :meth:`ContinuousAggregate.refresh` (one ``os.replace`` manifest
+    write), lower level first, so an upper level never claims a
+    watermark its lower level has not reached. A crash between two
+    commits leaves the upper level lagging — its previous manifest
+    intact, the new lower data not yet rolled up — until the same
+    cascade is re-run, which recomputes the upper window from the
+    then-current lower level.
+
     Correctness relies on the inductive invariant that every level is
     current over its whole materialized span — true when all writes
     go through this cascade (a late backfill re-refreshes its window
@@ -431,23 +443,7 @@ def cascade_refresh(
     O(window) facts; every other level reads O(widened window) PARTIAL
     rows — |keys| × fine buckets — never facts.
     """
-    if not levels:
-        return
-    base = levels[0]
-    if start_s is None or end_s is None:
-        lo, hi = (
-            source.select(base._eb().alias("_e"))
-            .agg(F.min("_e"), F.max("_e"))
-            .first()
-        )
-        if lo is None:
-            return
-        start_s = lo if start_s is None else start_s
-        end_s = (hi + base.secs) if end_s is None else end_s
-    if _cascade_initial_fused(levels, source, int(start_s), int(end_s)):
-        return
-    lo_i, hi_i = int(start_s), int(end_s)
-    prev: ContinuousAggregate | None = None
+    window, src, prev = (start_s, end_s), source, None
     for cagg in levels:
         if prev is not None:
             if cagg.secs % prev.secs != 0:
@@ -460,156 +456,18 @@ def cascade_refresh(
                     "upper hierarchy levels aggregate the lower level's "
                     "'bucket' column"
                 )
-        lo_i = cagg._align(lo_i)
-        hi_i = cagg._align(hi_i, up=True)
-        if prev is not None:
-            cap = prev.watermark_s()
-            if cap is None:
-                break
-            hi_i = min(hi_i, cagg._align(cap))
-            if hi_i <= lo_i:
-                # the touched coarse buckets are all still incomplete
-                # at the lower level; this level (and everything
-                # above) keeps serving them from the real-time tail
-                break
-        src = source if prev is None else prev.materialized()
-        cagg.refresh(src, start_s=lo_i, end_s=hi_i)
+            lo, hi = window
+            cap = cagg.align_down(prev.watermark_s())
+            window = (lo, min(cagg.align_up(hi), cap))
+            src = prev.materialized()
+        # None: nothing committed at this level — its window was empty
+        # or, above level 0, every touched coarse bucket is still
+        # incomplete below, so this level and all above keep serving
+        # it from the real-time tail
+        window = cagg.refresh(src, *window)
+        if window is None:
+            break
         prev = cagg
-
-
-def _fused_kill_point(name: str) -> None:
-    """Deterministic crash injection for the fused-commit soak
-    (soak_cagg_fused.py): SIGKILL-equivalent exit when the env var
-    names this boundary. Inert in production (one dict lookup)."""
-    if os.environ.get("CAGG_FUSED_KILL_AT") == name:
-        os._exit(137)
-
-
-def _cascade_initial_fused(
-    levels: list[ContinuousAggregate],
-    source: DataFrame,
-    start_s: int,
-    end_s: int,
-) -> bool:
-    """INITIAL-BUILD fast path for a two-level cascade (round 16,
-    VERDICT r15 #4): when both levels are FRESH (no committed
-    regions), the upper level's source-over-its-window is exactly the
-    lower level's just-computed aggregate — so instead of write →
-    commit → re-read-from-parquet → write → commit, both levels are
-    staged in ONE write job under ONE staging tree (the lower agg
-    lazily localCheckpoint'ed; both union branches read the same RDD,
-    so the write job computes it once), then renamed and committed
-    lower-level-first.
-
-    Returns True when it handled the cascade; False = caller runs the
-    general sequential path (incremental refreshes, >2 levels,
-    mismatched level schemas, or a level that cannot be refreshed).
-
-    Crash-safety is the SAME contract as ``refresh``: nothing under
-    ``d=<day>/v_...`` is visible until that level's single
-    ``os.replace`` manifest commit; a crash anywhere before the lower
-    commit leaves both manifests absent/previous and the next refresh
-    GCs the orphans; a crash BETWEEN the two commits leaves the upper
-    level un-refreshed — a legal cascade state (the upper level keeps
-    serving those buckets from its real-time tail; the next cascade
-    completes it). The kill-window soak (soak_cagg.py --fused-kills)
-    drives a kill at every boundary and asserts query() equivalence.
-
-    What it saves: one full parquet re-read of the lower level's
-    partials per cascade (at 100 TB: |keys| × fine-buckets rows), one
-    Spark write job, and half the staging churn. Refresh semantics,
-    watermark arithmetic and committed bytes are identical — windows
-    are computed with the exact expressions the sequential loop uses,
-    and the oracle hash over the registered entry is unchanged.
-    """
-    import os as _os
-
-    if len(levels) != 2:
-        return False
-    lower, upper = levels
-    # sequential-loop window arithmetic, replicated exactly
-    if upper.secs % lower.secs != 0 or upper.ts_col != "bucket":
-        return False  # let the general path raise its errors
-    if lower._load_manifest()["regions"] or upper._load_manifest()["regions"]:
-        return False  # incremental refresh → general path
-    lo0 = lower._align(start_s)
-    hi0 = lower._align(end_s, up=True)
-    if hi0 <= lo0:
-        return True  # nothing to refresh anywhere (general path no-ops)
-    lo1 = upper._align(lo0)
-    hi1 = min(upper._align(hi0, up=True), upper._align(hi0))
-    window = source.filter(
-        (F.col(lower.ts_col) >= F.timestamp_seconds(F.lit(lo0)))
-        & (F.col(lower.ts_col) < F.timestamp_seconds(F.lit(hi0)))
-    )
-    agg0 = (
-        lower._aggregate(window)
-        .withColumn("_d", F.to_date(F.timestamp_seconds("_eb")))
-        .localCheckpoint(eager=False)
-    )
-    agg1 = None
-    if hi1 > lo1:
-        src1 = agg0.drop("_d").filter(
-            (F.col(upper.ts_col) >= F.timestamp_seconds(F.lit(lo1)))
-            & (F.col(upper.ts_col) < F.timestamp_seconds(F.lit(hi1)))
-        )
-        agg1 = upper._aggregate(src1).withColumn(
-            "_d", F.to_date(F.timestamp_seconds("_eb"))
-        )
-        if sorted(agg1.columns) != sorted(agg0.columns):
-            return False  # level schemas differ → sequential path
-    vname = "v_000001"
-    staging = _os.path.join(lower.path, f"_staging_fused_{vname}")
-    union = agg0.withColumn("_lvl", F.lit(0))
-    if agg1 is not None:
-        union = union.unionByName(agg1.withColumn("_lvl", F.lit(1)))
-    _fused_kill_point("pre_write")
-    (
-        union.repartition("_lvl", "_d")
-        .write.mode("overwrite")
-        .partitionBy("_lvl", "_d")
-        .parquet(staging)
-    )
-    _fused_kill_point("post_write")
-    regions: list[dict[str, str]] = [{}, {}]
-    if _os.path.exists(staging):
-        first_rename = True
-        for lname in sorted(_os.listdir(staging)):
-            if not lname.startswith("_lvl="):
-                continue
-            lvl = int(lname[len("_lvl="):])
-            cagg = levels[lvl]
-            ldir = _os.path.join(staging, lname)
-            for dname in sorted(_os.listdir(ldir)):
-                if not dname.startswith("_d="):
-                    continue
-                day = dname[len("_d="):]
-                dest = _os.path.join(cagg.path, f"d={day}", vname)
-                _os.makedirs(_os.path.dirname(dest), exist_ok=True)
-                if _os.path.exists(dest):
-                    shutil.rmtree(dest)
-                _os.rename(_os.path.join(ldir, dname), dest)
-                regions[lvl][day] = vname
-                if first_rename:
-                    first_rename = False
-                    _fused_kill_point("mid_rename")
-        shutil.rmtree(staging, ignore_errors=True)
-    _fused_kill_point("pre_lower_commit")
-    # commit lower first (the cascade invariant: an upper level never
-    # claims a watermark its lower level has not reached)
-    lower._commit_manifest(
-        {"version": 1, "watermark_s": hi0, "regions": regions[0],
-         "history": {}}
-    )
-    lower._gc()
-    _fused_kill_point("between_commits")
-    if hi1 > lo1:
-        upper._commit_manifest(
-            {"version": 1, "watermark_s": hi1, "regions": regions[1],
-             "history": {}}
-        )
-        upper._gc()
-    return True
 
 
 def query_hierarchy(
