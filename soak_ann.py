@@ -170,7 +170,7 @@ def main() -> None:
     # ranking (int8 error ≪ inter-point angular gaps even inside
     # tight clusters), so unlike PQ it needs no residual trick to
     # resolve within-cluster order.
-    from timescale_cdc_spark.operators.similarity import sq8_topk
+    from timescale_cdc_spark.operators.sq8 import sq8_topk
 
     t0 = time.time()
     approx = {
@@ -183,7 +183,7 @@ def main() -> None:
     # Persisted SQ8 (round 11, VERDICT r10 #4): bounds + encode paid
     # ONCE at build; each query batch reads compressed codes off disk
     # — the amortization the one-shot sq8_topk pays per call.
-    from timescale_cdc_spark.operators.similarity import Sq8Index
+    from timescale_cdc_spark.operators.sq8 import Sq8Index
 
     with tempfile.TemporaryDirectory() as d:
         t0 = time.time()
@@ -202,7 +202,7 @@ def main() -> None:
     # analog of IVF-PQ, trading PQ's 8-byte codes for dim-byte codes
     # that need no codebook training and resolve within-cell order
     # without deep books.
-    from timescale_cdc_spark.operators.similarity import IvfSq8Index
+    from timescale_cdc_spark.operators.sq8 import IvfSq8Index
 
     with tempfile.TemporaryDirectory() as d:
         t0 = time.time()

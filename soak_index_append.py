@@ -33,11 +33,8 @@ import time
 from pyspark.sql import functions as F
 
 from soak_ann import DIM, synth_clustered_vecs
-from timescale_cdc_spark.operators.similarity import (
-    IvfSq8Index,
-    Sq8Index,
-    brute_force_topk_matmul,
-)
+from timescale_cdc_spark.operators.similarity import brute_force_topk_matmul
+from timescale_cdc_spark.operators.sq8 import IvfSq8Index, Sq8Index
 from timescale_cdc_spark.session import get_spark
 
 

@@ -752,44 +752,6 @@ def test_ivf_index_append_and_staleness(spark, sf_dir, tmp_path):
 
 
 @pytest.mark.slow
-def test_ivf_index_compact_recovers_crash_debris(spark, sf_dir, tmp_path):
-    """ADVICE r6 (medium): a crash between compact()'s two renames
-    leaves '_cell=N._compact_old' holding the only copy of cell N.
-    compact() must (a) restore that leaf rather than compacting the
-    debris as a bogus string-valued cell, and (b) sweep stale tmp
-    dirs next to intact leaves. Query results must equal pre-crash."""
-    import os
-    import shutil
-
-    from timescale_cdc_spark.operators.ann_index import IvfIndex
-
-    em = load_table(spark, sf_dir, "embeddings")
-    queries = em.filter(F.col("vec_id") < 10)
-    idx = IvfIndex(spark, str(tmp_path / "ivf_c")).build(em, n_clusters=8)
-    before = {(r.q_id, r.c_id, r.cos)
-              for r in idx.topk(queries, k=5, n_probe=3).collect()}
-    n_total = idx.corpus().count()
-
-    corpus_dir = os.path.join(str(tmp_path / "ivf_c"), "corpus")
-    cells = sorted(n for n in os.listdir(corpus_dir) if n.startswith("_cell="))
-    # Crash state 1: cell half-swapped — live dir gone, only ._compact_old.
-    victim = os.path.join(corpus_dir, cells[0])
-    os.rename(victim, victim + "._compact_old")
-    # Crash state 2: stale tmp next to an intact live dir.
-    survivor = os.path.join(corpus_dir, cells[1])
-    shutil.copytree(survivor, survivor + "._compact_tmp")
-
-    rewritten = idx.compact()
-    assert rewritten == n_total  # every row recovered and compacted
-    names = set(os.listdir(corpus_dir))
-    assert not any("._compact_" in n for n in names), names
-    spark.catalog.refreshByPath(corpus_dir)
-    after = {(r.q_id, r.c_id, r.cos)
-             for r in idx.topk(queries, k=5, n_probe=3).collect()}
-    assert after == before
-
-
-@pytest.mark.slow
 def test_lsh_index_build_append_query(spark, sf_dir, tmp_path):
     """Persisted LSH index: because the sketch is data-independent,
     build(90%) + append(10%) must equal the inline operator over the
@@ -2160,10 +2122,8 @@ def test_sq8_topk_exact_on_separated_corpus(spark):
     import math
     import random
 
-    from timescale_cdc_spark.operators.similarity import (
-        brute_force_topk,
-        sq8_topk,
-    )
+    from timescale_cdc_spark.operators.similarity import brute_force_topk
+    from timescale_cdc_spark.operators.sq8 import sq8_topk
 
     rng = random.Random(7)
     # 40 well-separated random vectors + one near-copy of vec 0;
@@ -2707,7 +2667,7 @@ def test_sq8_index_matches_one_shot(spark, sf_dir, tmp_path):
     bounds → same codes → same candidates → same exact refine), while
     serving repeat batches without re-training bounds or re-encoding
     — pinned by querying twice and by the meta surface."""
-    from timescale_cdc_spark.operators.similarity import Sq8Index, sq8_topk
+    from timescale_cdc_spark.operators.sq8 import Sq8Index, sq8_topk
 
     em = load_table(spark, sf_dir, "embeddings")
     q = em.filter(F.col("vec_id") < 10)
@@ -2826,10 +2786,8 @@ def test_ivf_sq8_index_recall_and_pruning(spark, sf_dir, tmp_path):
     brute force ≥ the family floor on the fixture corpus, the codes
     scan is partition-pruned to the probed cells, and a re-opened
     index serves identically."""
-    from timescale_cdc_spark.operators.similarity import (
-        IvfSq8Index,
-        brute_force_topk,
-    )
+    from timescale_cdc_spark.operators.similarity import brute_force_topk
+    from timescale_cdc_spark.operators.sq8 import IvfSq8Index
 
     em = load_table(spark, sf_dir, "embeddings")
     q = em.filter(F.col("vec_id") < 10)
@@ -3111,7 +3069,7 @@ def test_sq8_index_append_and_staleness(spark, sf_dir, tmp_path):
     are immediately queryable with EXACT refined cosines, and
     staleness() reports appended/clamp fractions that trip the
     rebuild trigger as drift grows."""
-    from timescale_cdc_spark.operators.similarity import Sq8Index
+    from timescale_cdc_spark.operators.sq8 import Sq8Index
 
     em = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -3167,7 +3125,7 @@ def test_ivf_sq8_index_append_and_staleness(spark, sf_dir, tmp_path):
     findable via the pruned probe path; staleness() carries the
     IvfIndex contract fields and flips rebuild_recommended past the
     appended-fraction threshold."""
-    from timescale_cdc_spark.operators.similarity import IvfSq8Index
+    from timescale_cdc_spark.operators.sq8 import IvfSq8Index
 
     em = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -3210,10 +3168,7 @@ def test_sq8_index_repair_recovers_interrupted_append(spark, sf_dir, tmp_path):
     shortlist (bounded recall gap, NEVER a silently dropped refine
     row) — and repair() re-encodes exactly the missing ids, after
     which the vector is found with an exact refined cosine."""
-    from timescale_cdc_spark.operators.similarity import (
-        IvfSq8Index,
-        Sq8Index,
-    )
+    from timescale_cdc_spark.operators.sq8 import IvfSq8Index, Sq8Index
 
     em = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -3371,7 +3326,7 @@ def test_lsh_index_delete_compact(spark, sf_dir, tmp_path):
     path = str(tmp_path / "lsh_d")
     idx = LshIndex(spark, path).build(em)
     n_ids = em.count()
-    chunks = idx._config()["chunks"]
+    chunks = idx.meta()["chunks"]
     assert idx.banded().count() == n_ids * chunks
 
     before = {(r.q_id, r.c_id, r.rank, r.cos)
@@ -3409,10 +3364,7 @@ def test_sq8_families_delete_compact(spark, sf_dir, tmp_path):
     cell partitioning survives the purge (probes keep pruning)."""
     import os
 
-    from timescale_cdc_spark.operators.similarity import (
-        IvfSq8Index,
-        Sq8Index,
-    )
+    from timescale_cdc_spark.operators.sq8 import IvfSq8Index, Sq8Index
 
     em = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")

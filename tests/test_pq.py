@@ -165,7 +165,8 @@ def test_ivfpq_codes_partitioned_and_scan_pruned(ivfpq_idx):
     row = idx.codes().select(F.min(F.size("_code"))).first()
     assert row[0] == 8
     cells = [
-        n for n in os.listdir(idx._codes_path) if n.startswith("_cell=")
+        n for n in os.listdir(os.path.join(idx.path, "codes"))
+        if n.startswith("_cell=")
     ]
     assert len(cells) == 16
 

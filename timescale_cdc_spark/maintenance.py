@@ -20,7 +20,6 @@ from __future__ import annotations
 import argparse
 import datetime as dt
 import json
-import os
 
 from timescale_cdc_spark.cdc.log import EventLog
 from timescale_cdc_spark.cdc.retention import (
@@ -153,7 +152,7 @@ def run_maintenance(
         # an unbuilt index (or one predating the meta sidecar) must
         # degrade to an error FIELD, not raise after retention and
         # compaction already ran and lose the whole report.
-        if os.path.isdir(idx._meta_path):
+        if idx.has_meta():
             report["ann_index"] = idx.staleness()
         else:
             report["ann_index"] = {

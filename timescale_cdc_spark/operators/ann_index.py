@@ -16,7 +16,10 @@ The corpus is disk-partitioned by cell, so a probe of ``n_probe``
 cells is a PARTITION-PRUNED scan — at 100 TB the query side reads
 ``n_probe / n_clusters`` of the bytes, not a filtered full scan. The
 centroid table is tiny (n_clusters rows) and rides in a broadcast
-join; plan size stays O(1) in cluster count.
+join; plan size stays O(1) in cluster count. The quantizer is the
+shared IVF partitioner (operators/ivf.py); paths, live reads, delete,
+compact and the deleted fraction come from the shared lifecycle
+(operators/persisted_index.py).
 
 Reference parity: the reference has no ANN surface (its embedding
 columns never existed); this is part of the training-data-pipeline
@@ -25,31 +28,19 @@ extension mandated alongside SURVEY §2.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from timescale_cdc_spark.operators import ivf
+from timescale_cdc_spark.operators.persisted_index import PersistedIndex
 from timescale_cdc_spark.operators.similarity import _cosine_for
 
 
-class IvfIndex:
+class IvfIndex(PersistedIndex):
     """Build-once / query-many IVF-Flat index over an embedding table."""
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path.rstrip("/")
-
-    @property
-    def _centroids_path(self) -> str:
-        return f"{self.path}/centroids"
-
-    @property
-    def _corpus_path(self) -> str:
-        return f"{self.path}/corpus"
-
-    @property
-    def _meta_path(self) -> str:
-        return f"{self.path}/meta"
+    DATA_DIRS = ("corpus",)
+    PARTITION_BY = ("_cell",)
 
     # -- build ---------------------------------------------------------------
 
@@ -68,38 +59,17 @@ class IvfIndex:
         at billion-vector scale — the quantizer needs cluster SHAPES,
         not every point); assignment still covers the full corpus.
         """
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
         vecs = corpus.select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            array_to_vector(F.col(vec_col).cast("array<double>")).alias("_fv"),
+            F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
         )
-        fit_input = (
-            vecs.sample(fraction=sample_fraction, seed=seed)
-            if sample_fraction
-            else vecs
+        assigned, cent = ivf.fit_cells(
+            vecs, n_clusters, seed, sample_fraction
         )
-        km = KMeans(
-            k=n_clusters, seed=seed, featuresCol="_fv", predictionCol="_cell"
-        )
-        model = km.fit(fit_input)
-
-        cent = self.spark.createDataFrame(
-            [
-                (ci, [float(x) for x in np.asarray(c)])
-                for ci, c in enumerate(model.clusterCenters())
-            ],
-            schema="_cell int, _centroid array<double>",
-        )
-        cent.coalesce(1).write.mode("overwrite").parquet(self._centroids_path)
-
-        assigned = model.transform(vecs).select("c_id", "c_vec", "_cell")
+        self._write_small("centroids", cent)
         (
             assigned.write.mode("overwrite")
             .partitionBy("_cell")
-            .parquet(self._corpus_path)
+            .parquet(self._dir("corpus"))
         )
 
         # Build-time stats for the staleness signal: corpus size and
@@ -109,26 +79,12 @@ class IvfIndex:
             .join(F.broadcast(self.centroids()), "_cell")
             .agg(
                 F.count("*").alias("n_at_build"),
-                F.avg(self._l2_sq(F.col("c_vec"))).alias("qerr_at_build"),
+                F.avg(ivf.l2_sq("c_vec")).alias("qerr_at_build"),
             )
             .withColumn("n_clusters", F.lit(n_clusters))
         )
-        stats.coalesce(1).write.mode("overwrite").parquet(self._meta_path)
+        self._write_small("meta", stats)
         return self
-
-    @staticmethod
-    def _l2_sq(vec: F.Column) -> F.Column:
-        """Squared L2 distance between a vector column and the
-        ``_centroid`` column it is joined with."""
-        return F.aggregate(
-            F.zip_with(
-                vec,
-                F.col("_centroid"),
-                lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
 
     # -- maintenance ---------------------------------------------------------
 
@@ -139,9 +95,9 @@ class IvfIndex:
         vec_col: str = "embedding",
     ) -> None:
         """Absorb inserts WITHOUT refitting the quantizer: assign each
-        new vector to its nearest existing centroid (broadcast join +
-        per-vector rank — the exact rule ``model.transform`` applied at
-        build time) and append into that cell's partition directory.
+        new vector to its nearest existing centroid
+        (:func:`ivf.assign_cells`) and append into that cell's
+        partition directory.
 
         This is how a CDC-fed index stays queryable between rebuilds —
         an insert batch is one broadcast join + one partition-local
@@ -155,113 +111,14 @@ class IvfIndex:
         v = new_vectors.select(
             F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
         )
-        scored = v.crossJoin(F.broadcast(self.centroids())).withColumn(
-            "_dist", self._l2_sq(F.col("c_vec"))
-        )
-        # argmin via PARTIAL AGGREGATION, not a window (round 12, the
-        # IvfSq8Index.append lesson): the scored crossJoin is |batch| ×
-        # n_cells rows carrying the full vector — a window shuffles and
-        # sorts all of them; min(struct(_dist, _cell)) map-side-combines
-        # each id to one tiny row before the exchange (same
-        # deterministic tie-break: lowest cell wins). The joined-back
-        # batch is then exchanged once on _cell so each append writes
-        # one file per touched cell, not tasks × cells.
-        best = (
-            scored.groupBy("c_id")
-            .agg(F.min(F.struct("_dist", "_cell")).alias("_b"))
-            .select("c_id", F.col("_b._cell").alias("_cell"))
-        )
-        assigned = v.join(best, "c_id").repartition("_cell")
+        # one exchange on _cell so each append writes one file per
+        # touched cell, not tasks × cells
+        assigned = ivf.assign_cells(v, self.centroids()).repartition("_cell")
         (
             assigned.write.mode("append")
             .partitionBy("_cell")
-            .parquet(self._corpus_path)
+            .parquet(self._dir("corpus"))
         )
-
-    def delete(self, ids, id_col: str = "vec_id") -> int:
-        """Tombstone deletions (round 14, VERDICT r13 #4 — the
-        takedown path). Takes effect immediately: every read goes
-        through :meth:`corpus`, which anti-joins the tombstone set,
-        so deleted vectors vanish from topk/staleness at once. Bytes
-        are reclaimed by the next :meth:`compact`, which also drops
-        the tombstones it purged. ``ids``: DataFrame with ``id_col``
-        or an iterable of id values. Returns newly recorded ids."""
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        return tb.add_tombstones(self.spark, self.path, ids, id_col)
-
-    def compact(self, target_files: int = 1) -> int:
-        """Rewrite each cell directory's accumulated small files
-        (every :meth:`append` adds one batch of files per touched
-        cell) into ``target_files`` sorted files — the same
-        leaf-granular atomic-swap compaction the event log uses
-        (cdc/retention.py::_compact_dir, incl. its crash recovery).
-        Round 14: the rewrite also PURGES tombstoned rows (each leaf
-        anti-joins the deleted-id set) and clears the tombstone dir
-        LAST — a crash mid-purge leaves tombstones in place, so reads
-        stay filtered and the next compact finishes. LIVE cell
-        contents are unchanged, so probes/recall are unaffected; only
-        file-open overhead (and deleted bytes) shrink. Single-writer
-        contract, like all maintenance here. Returns live rows
-        rewritten.
-
-        Crash recovery (ADVICE r6): a crash between the two renames
-        below leaves ``_cell=N._compact_old`` holding the only copy of
-        cell N. Before compacting, sweep those survivors and restore
-        the real leaf (mirroring cdc/retention.py::_recover_leaves) —
-        and never treat swap debris as a cell (``'N._compact_old'``
-        would otherwise corrupt _cell type inference to string and
-        vanish from the integer-keyed centroid joins)."""
-        import os
-
-        from timescale_cdc_spark.cdc.retention import _recover_dir
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        total = 0
-        if not os.path.isdir(self._corpus_path):
-            return 0
-        dead = tb.read_tombstones(self.spark, self.path)
-        # Recovery sweep FIRST: each *._compact_old names a leaf whose
-        # live dir may have been lost mid-swap; _recover_dir restores
-        # it and clears tmp debris. os.listdir is snapshotted before
-        # the loop so restored leaves are re-listed explicitly.
-        for name in sorted(os.listdir(self._corpus_path)):
-            if name.endswith("._compact_old"):
-                leaf = os.path.join(
-                    self._corpus_path, name[: -len("._compact_old")]
-                )
-                _recover_dir(leaf)
-        for name in sorted(os.listdir(self._corpus_path)):
-            if not name.startswith("_cell=") or "._compact_" in name:
-                continue
-            leaf = os.path.join(self._corpus_path, name)
-            _recover_dir(leaf)
-            if not os.path.isdir(leaf):
-                continue
-            df = self.spark.read.parquet(leaf)
-            if dead is not None:
-                df = df.join(F.broadcast(dead), "c_id", "left_anti")
-            n = df.count()
-            tmp = leaf + "._compact_tmp"
-            (
-                df.coalesce(target_files)
-                .sortWithinPartitions("c_id")
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-            old = leaf + "._compact_old"
-            os.rename(leaf, old)
-            os.rename(tmp, leaf)
-            import shutil
-
-            shutil.rmtree(old)
-            total += n
-        # every leaf committed → the purged ids are physically gone;
-        # dropping the tombstones LAST keeps reads correct through
-        # any crash window above
-        tb.clear_tombstones(self.spark, self.path)
-        self.spark.catalog.refreshByPath(self._corpus_path)
-        return total
 
     def staleness(self) -> dict:
         """Rebuild signal for the maintenance loop. Returns:
@@ -274,86 +131,33 @@ class IvfIndex:
           append volume (new vectors far from every centroid).
         - ``cell_imbalance``: max cell size / mean cell size — a hot
           cell degrades probe cost even when recall holds.
-        - ``deleted_fraction`` (round 14): tombstoned share of the
-          stored rows — dead bytes every probe still scans past until
+        - ``deleted_fraction``: tombstoned share of the stored rows —
+          dead bytes every probe still scans past until
           :meth:`compact` purges them; ``compact_recommended`` flips
           at > 0.10.
         - ``rebuild_recommended``: True once appended_fraction > 0.25
           or qerr_ratio > 1.5.
 
-        ``n_now``/``appended_fraction`` count LIVE rows (deletes of
-        build-time rows can push the raw difference negative — it is
-        clamped at 0; the deleted fraction carries that signal).
-
         One pruned-free corpus scan (count + one agg) — cheap relative
         to a rebuild's KMeans fit; run it on the maintenance cadence,
         not per query.
         """
-        meta = self.spark.read.parquet(self._meta_path).collect()[0]
-        cur = (
-            self.corpus()
-            .join(F.broadcast(self.centroids()), "_cell")
-            .groupBy("_cell")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(self._l2_sq(F.col("c_vec"))).alias("qerr_sum"),
-            )
-            .agg(
-                F.sum("n").alias("n_now"),
-                (F.sum("qerr_sum") / F.sum("n")).alias("qerr_now"),
-                (F.max("n") / F.avg("n")).alias("cell_imbalance"),
-            )
-            .collect()[0]
+        info = self.meta()
+        n_now, signals = ivf.drift(
+            self.corpus(), self.centroids(), info["qerr_at_build"]
         )
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        # the live corpus can be EMPTY since delete() exists (every id
-        # tombstoned) — the aggregates then come back NULL, and the
-        # Sq8-style guards below keep every ratio defined
-        n_now = cur["n_now"] or 0
-        appended_fraction = (
-            max(0.0, (n_now - meta["n_at_build"]) / n_now)
-            if n_now
-            else 0.0
+        return self._staleness(
+            info, n_now, signals, signals["qerr_ratio"] > 1.5
         )
-        qerr_ratio = (
-            cur["qerr_now"] / meta["qerr_at_build"]
-            if meta["qerr_at_build"] and cur["qerr_now"] is not None
-            else 1.0
-        )
-        n_dead = tb.count_tombstones(self.spark, self.path)
-        deleted_fraction = (
-            n_dead / (n_now + n_dead) if n_dead else 0.0
-        )
-        return {
-            "n_at_build": meta["n_at_build"],
-            "n_now": n_now,
-            "appended_fraction": appended_fraction,
-            "qerr_ratio": qerr_ratio,
-            "cell_imbalance": cur["cell_imbalance"],
-            "deleted_fraction": deleted_fraction,
-            "compact_recommended": bool(deleted_fraction > 0.10),
-            "rebuild_recommended": bool(
-                appended_fraction > 0.25 or qerr_ratio > 1.5
-            ),
-        }
 
     # -- query ---------------------------------------------------------------
 
     def centroids(self) -> DataFrame:
-        return self.spark.read.parquet(self._centroids_path)
+        return self._read("centroids")
 
     def corpus(self) -> DataFrame:
-        """LIVE corpus rows: tombstoned ids are anti-joined out (zero
-        overhead until the first :meth:`delete`), so every consumer —
-        topk candidates, staleness counts — sees deletes immediately.
-        The ``_cell`` partition filter still prunes: Catalyst pushes
-        it through the anti-join to the scan."""
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        return tb.filter_live(
-            self.spark, self.path, self.spark.read.parquet(self._corpus_path)
-        )
+        """LIVE corpus rows ``(c_id, c_vec, _cell)``."""
+        return self._live("corpus")
 
     def topk(
         self,
@@ -376,31 +180,10 @@ class IvfIndex:
         q = queries.select(
             F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
         )
-        l2 = F.aggregate(
-            F.zip_with(
-                F.col("q_vec"),
-                F.col("_centroid"),
-                lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+        probes = ivf.probe(q, self.centroids(), n_probe)
+        pruned = self.corpus().filter(
+            F.col("_cell").isin(ivf.probed_cells(probes))
         )
-        scored_cells = q.crossJoin(F.broadcast(self.centroids())).withColumn(
-            "_dist", l2
-        )
-        wp = Window.partitionBy("q_id").orderBy(F.asc("_dist"), F.asc("_cell"))
-        probes = (
-            scored_cells.withColumn("_pr", F.row_number().over(wp))
-            .filter(F.col("_pr") <= n_probe)
-            .select("q_id", "q_vec", "_cell")
-        )
-        # Partition pruning needs literal cell values at planning time:
-        # collect ONLY the probed cell ids (≤ n_probe × |queries| ints,
-        # tiny by construction — queries are the small broadcast side).
-        cells = sorted(
-            r["_cell"] for r in probes.select("_cell").distinct().collect()
-        )
-        pruned = self.corpus().filter(F.col("_cell").isin(cells))
         cand = pruned.join(
             F.broadcast(probes),
             (pruned["_cell"] == probes["_cell"])
@@ -417,7 +200,7 @@ class IvfIndex:
         )
 
 
-class LshIndex:
+class LshIndex(PersistedIndex):
     """Build-once / query-many banded hyperplane-LSH index.
 
     ``hyperplane_lsh_topk`` re-sketches the corpus on every call —
@@ -426,10 +209,10 @@ class LshIndex:
     is pennies. A serving deployment sketches ONCE and answers many
     query batches from the banded layout:
 
-        <path>/banded/chunk=<c>/   (c_id long, c_vec array<float>,
-                                    key long)
-        <path>/meta/               (num_planes, chunks, width, dim,
-                                    seed, n_flip)
+        <path>/banded/chunk=<c>/kp=<p>/  (c_id long, c_vec array<float>,
+                                          key long)
+        <path>/meta/                     (num_planes, chunks, width, dim,
+                                          seed, n_flip, prefix_bits)
 
     The banded table is disk-partitioned by band (chunk) and, with
     ``prefix_bits=p``, further by the key's top p bits: a query batch
@@ -446,24 +229,13 @@ class LshIndex:
     decay and there is no staleness metric to watch (the structural
     advantage of data-independent indexes; the flip side is no
     adaptation to the corpus distribution, which is what
-    :class:`IvfIndex` buys).
+    :class:`IvfIndex` buys). :meth:`deleted_fraction` is its
+    compaction trigger; a purged table is bit-equivalent to a fresh
+    build over the live corpus.
     """
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path.rstrip("/")
-
-    @property
-    def _banded_path(self) -> str:
-        return f"{self.path}/banded"
-
-    @property
-    def _meta_path(self) -> str:
-        return f"{self.path}/meta"
-
-    def _config(self) -> dict:
-        row = self.spark.read.parquet(self._meta_path).collect()[0]
-        return row.asDict()
+    DATA_DIRS = ("banded",)
+    PARTITION_BY = ("chunk", "kp")
 
     def build(
         self,
@@ -529,14 +301,13 @@ class LshIndex:
             "kp", F.shiftright("key", width - prefix_bits)
         )
         banded.write.mode("overwrite").partitionBy("chunk", "kp").parquet(
-            self._banded_path
+            self._dir("banded")
         )
-        meta = self.spark.createDataFrame(
+        self._write_small("meta", self.spark.createDataFrame(
             [(num_planes, chunks, width, dim, seed, n_flip, prefix_bits)],
             schema="num_planes int, chunks int, width int, dim int, "
                    "seed int, n_flip int, prefix_bits int",
-        )
-        meta.coalesce(1).write.mode("overwrite").parquet(self._meta_path)
+        ))
         return self
 
     def append(
@@ -555,7 +326,7 @@ class LshIndex:
             _hyperplanes,
         )
 
-        cfg = self._config()
+        cfg = self.meta()
         planes = _hyperplanes(cfg["num_planes"], cfg["dim"], cfg["seed"])
         banded = _banded_arrow(
             new_vectors, "c", planes, cfg["chunks"], cfg["width"],
@@ -564,63 +335,13 @@ class LshIndex:
             "kp", F.shiftright("key", cfg["width"] - cfg["prefix_bits"])
         )
         banded.write.mode("append").partitionBy("chunk", "kp").parquet(
-            self._banded_path
+            self._dir("banded")
         )
-
-    def delete(self, ids, id_col: str = "vec_id") -> int:
-        """Tombstone deletions (round 14, VERDICT r13 #4): effective
-        immediately through :meth:`banded`'s anti-join (a deleted id
-        drops out of every band at once); bytes reclaimed by
-        :meth:`compact`. Returns newly recorded ids."""
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        return tb.add_tombstones(self.spark, self.path, ids, id_col)
-
-    def compact(self) -> int:
-        """Physically purge tombstoned rows: rewrite the banded table
-        minus the deleted-id set behind the atomic two-rename swap
-        (same partition layout), then clear the tombstones LAST —
-        crash-safe exactly like IvfIndex.compact. Returns live banded
-        rows rewritten. (Band contents are data-independent sketches,
-        so a purged table is bit-equivalent to a fresh build over the
-        live corpus — the same no-drift property appends enjoy.)"""
-        import os
-
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        if not os.path.isdir(self._banded_path):
-            return 0
-        tb.recover_swap(self._banded_path)
-        live = self.banded()
-        n = live.count()
-        tb.swap_rewrite(
-            self.spark, self._banded_path, live, ("chunk", "kp")
-        )
-        tb.clear_tombstones(self.spark, self.path)
-        return n
-
-    def deleted_fraction(self) -> float:
-        """Tombstoned share of stored ids (each id stores ``chunks``
-        banded rows, so the id-level fraction equals the row-level
-        one). The compaction trigger — LSH has no other staleness
-        signal (see the class docstring)."""
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        n_dead = tb.count_tombstones(self.spark, self.path)
-        if not n_dead:
-            return 0.0
-        cfg = self._config()
-        n_live_ids = self.banded().count() / cfg["chunks"]
-        return n_dead / (n_live_ids + n_dead)
 
     def banded(self) -> DataFrame:
-        """LIVE banded rows (tombstoned ids anti-joined out; zero
-        overhead until the first :meth:`delete`)."""
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        return tb.filter_live(
-            self.spark, self.path, self.spark.read.parquet(self._banded_path)
-        )
+        """LIVE banded rows ``(c_id, c_vec, key, chunk, kp)``; a
+        deleted id drops out of every band at once."""
+        return self._live("banded")
 
     def topk(self, queries: DataFrame, k: int = 5,
              id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -635,7 +356,7 @@ class LshIndex:
             _lsh_rerank,
         )
 
-        cfg = self._config()
+        cfg = self.meta()
         planes = _hyperplanes(cfg["num_planes"], cfg["dim"], cfg["seed"])
         qb = _banded_arrow(
             queries, "q", planes, cfg["chunks"], cfg["width"],

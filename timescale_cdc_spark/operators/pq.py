@@ -34,7 +34,7 @@ Spark-native split of the work (who computes what, and why):
   per query from the raw vectors — the standard ADC→exact refine
   step; R bounds the exact work per query.
 
-Storage (IvfIndex conventions):
+Storage (the persisted_index.py layout and lifecycle):
 
     <path>/codebooks/   (_j int, _cid int, _centroid array<double>)
     <path>/codes/       (c_id long, _code array<int>)
@@ -45,9 +45,11 @@ Storage (IvfIndex conventions):
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timescale_cdc_spark.operators import ivf
+from timescale_cdc_spark.operators.persisted_index import PersistedIndex
 from timescale_cdc_spark.operators.similarity import _cosine_for
 
 
@@ -137,28 +139,13 @@ def _adc_expr(m: int, k_sub: int):
     )
 
 
-class PqIndex:
-    """Build-once / query-many product-quantization index."""
+class PqIndex(PersistedIndex):
+    """Build-once / query-many product-quantization index. Build-once:
+    there is no append path, so deletes are the only staleness it
+    accumulates and :meth:`deleted_fraction` is its compaction
+    trigger."""
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path.rstrip("/")
-
-    @property
-    def _codebooks_path(self) -> str:
-        return f"{self.path}/codebooks"
-
-    @property
-    def _codes_path(self) -> str:
-        return f"{self.path}/codes"
-
-    @property
-    def _raw_path(self) -> str:
-        return f"{self.path}/raw"
-
-    @property
-    def _meta_path(self) -> str:
-        return f"{self.path}/meta"
+    DATA_DIRS = ("raw", "codes")
 
     # -- build ---------------------------------------------------------
 
@@ -193,91 +180,34 @@ class PqIndex:
         cb_rows = _train_subquantizers(
             fit_base, "c_vec", m, d_sub, k_sub, seed
         )
-        cb = self.spark.createDataFrame(
+        self._write_small("codebooks", self.spark.createDataFrame(
             cb_rows, schema="_j int, _cid int, _centroid array<double>"
-        )
-        cb.coalesce(1).write.mode("overwrite").parquet(self._codebooks_path)
+        ))
 
         encoded = _encode_with_books(
             vecs, "c_vec", cb_rows, m, d_sub, k_sub, extra_cols=[]
         )
-        encoded.write.mode("overwrite").parquet(self._codes_path)
-        vecs.write.mode("overwrite").parquet(self._raw_path)
+        encoded.write.mode("overwrite").parquet(self._dir("codes"))
+        vecs.write.mode("overwrite").parquet(self._dir("raw"))
 
-        meta = self.spark.createDataFrame(
+        self._write_small("meta", self.spark.createDataFrame(
             [(m, k_sub, dim, vecs.count())],
             schema="m int, k_sub int, dim int, n_at_build long",
-        )
-        meta.coalesce(1).write.mode("overwrite").parquet(self._meta_path)
+        ))
         return self
 
     # -- read ----------------------------------------------------------
 
     def codebooks(self) -> DataFrame:
-        return self.spark.read.parquet(self._codebooks_path)
+        return self._read("codebooks")
 
     def codes(self) -> DataFrame:
-        """LIVE code rows (tombstoned ids anti-joined out — zero
-        overhead until the first :meth:`delete`)."""
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        return tb.filter_live(
-            self.spark, self.path, self.spark.read.parquet(self._codes_path)
-        )
+        """LIVE code rows ``(c_id, _code)``."""
+        return self._live("codes")
 
     def raw(self) -> DataFrame:
-        """LIVE raw rows (same tombstone filter as :meth:`codes`)."""
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        return tb.filter_live(
-            self.spark, self.path, self.spark.read.parquet(self._raw_path)
-        )
-
-    def meta(self) -> dict:
-        return self.spark.read.parquet(self._meta_path).first().asDict()
-
-    # -- maintenance (round 14, VERDICT r13 #4: the same takedown
-    # contract as the other persisted classes — tombstones.py) ---------
-
-    def delete(self, ids, id_col: str = "vec_id") -> int:
-        """Tombstone deletions: effective immediately through the
-        :meth:`codes`/:meth:`raw` anti-joins (a deleted id leaves the
-        ADC shortlist and the exact refine at once); bytes reclaimed
-        by :meth:`compact`. Returns newly recorded ids."""
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        return tb.add_tombstones(self.spark, self.path, ids, id_col)
-
-    def compact(self) -> int:
-        """Physically purge tombstoned rows from codes AND raw behind
-        atomic two-rename swaps, clearing the tombstones LAST (crash
-        anywhere mid-purge leaves reads filtered; the next compact
-        finishes). Returns live corpus rows."""
-        import os
-
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        if not os.path.isdir(self._raw_path):
-            return 0
-        tb.recover_swap(self._codes_path)
-        tb.recover_swap(self._raw_path)
-        live_raw = self.raw()
-        n = live_raw.count()
-        tb.swap_rewrite(self.spark, self._codes_path, self.codes())
-        tb.swap_rewrite(self.spark, self._raw_path, live_raw)
-        tb.clear_tombstones(self.spark, self.path)
-        return n
-
-    def deleted_fraction(self) -> float:
-        """Tombstoned share of stored rows — the compaction trigger
-        (PQ indexes are build-once: no append path, so deletes are
-        the only staleness this class can accumulate)."""
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        n_dead = tb.count_tombstones(self.spark, self.path)
-        if not n_dead:
-            return 0.0
-        return n_dead / (self.raw().count() + n_dead)
+        """LIVE raw rows ``(c_id, c_vec)``."""
+        return self._live("raw")
 
     # -- query ---------------------------------------------------------
 
@@ -374,7 +304,7 @@ class PqIndex:
         )
 
 
-class IvfPqIndex:
+class IvfPqIndex(PersistedIndex):
     """IVF-PQ with RESIDUAL encoding — the FAISS billion-scale design
     (Jégou et al. §V; FAISS ``IndexIVFPQ``): a coarse KMeans quantizer
     routes each vector to a cell, and PQ encodes the RESIDUAL
@@ -399,31 +329,12 @@ class IvfPqIndex:
         <path>/codes/_cell=<c>/    (c_id long, _code array<int>)
         <path>/raw/_cell=<c>/      (c_id long, c_vec array<float>)
         <path>/meta/
+
+    Build-once, like :class:`PqIndex`.
     """
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path.rstrip("/")
-
-    @property
-    def _centroids_path(self) -> str:
-        return f"{self.path}/centroids"
-
-    @property
-    def _codebooks_path(self) -> str:
-        return f"{self.path}/codebooks"
-
-    @property
-    def _codes_path(self) -> str:
-        return f"{self.path}/codes"
-
-    @property
-    def _raw_path(self) -> str:
-        return f"{self.path}/raw"
-
-    @property
-    def _meta_path(self) -> str:
-        return f"{self.path}/meta"
+    DATA_DIRS = ("raw", "codes")
+    PARTITION_BY = ("_cell",)
 
     def build(
         self,
@@ -436,48 +347,18 @@ class IvfPqIndex:
         seed: int = 42,
         sample_fraction: float | None = None,
     ) -> "IvfPqIndex":
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
         dim = corpus.select(F.size(vec_col).alias("d")).first()["d"]
         if dim % m != 0:
             raise ValueError(f"dim {dim} not divisible by m={m}")
         d_sub = dim // m
 
         vecs = corpus.select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            array_to_vector(F.col(vec_col).cast("array<double>")).alias(
-                "_fv"
-            ),
+            F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
         )
-        fit_base = (
-            vecs.sample(fraction=sample_fraction, seed=seed)
-            if sample_fraction
-            else vecs
-        )
-        coarse = KMeans(
-            k=n_cells, seed=seed, featuresCol="_fv", predictionCol="_cell"
-        ).fit(fit_base)
-        cent = self.spark.createDataFrame(
-            [
-                (ci, [float(x) for x in np.asarray(c)])
-                for ci, c in enumerate(coarse.clusterCenters())
-            ],
-            schema="_cell int, _centroid array<double>",
-        )
-        cent.coalesce(1).write.mode("overwrite").parquet(
-            self._centroids_path
-        )
-
-        assigned = coarse.transform(vecs).select("c_id", "c_vec", "_cell")
-        residual = F.zip_with(
-            F.col("c_vec"),
-            F.col("_centroid"),
-            lambda a, b: a.cast("double") - b,
-        )
+        assigned, cent = ivf.fit_cells(vecs, n_cells, seed, sample_fraction)
+        self._write_small("centroids", cent)
         with_res = assigned.join(F.broadcast(cent), "_cell").select(
-            "c_id", "c_vec", "_cell", residual.alias("_res")
+            "c_id", "c_vec", "_cell", ivf.residual("c_vec").alias("_res")
         )
 
         res_fit = (
@@ -488,10 +369,9 @@ class IvfPqIndex:
         cb_rows = _train_subquantizers(
             res_fit, "_res", m, d_sub, k_sub, seed
         )
-        cb = self.spark.createDataFrame(
+        self._write_small("codebooks", self.spark.createDataFrame(
             cb_rows, schema="_j int, _cid int, _centroid array<double>"
-        )
-        cb.coalesce(1).write.mode("overwrite").parquet(self._codebooks_path)
+        ))
 
         encoded = _encode_with_books(
             with_res.select("c_id", "_res", "_cell"),
@@ -503,95 +383,31 @@ class IvfPqIndex:
             extra_cols=["_cell"],
         )
         encoded.write.mode("overwrite").partitionBy("_cell").parquet(
-            self._codes_path
+            self._dir("codes")
         )
         assigned.write.mode("overwrite").partitionBy("_cell").parquet(
-            self._raw_path
+            self._dir("raw")
         )
 
-        meta = self.spark.createDataFrame(
+        self._write_small("meta", self.spark.createDataFrame(
             [(n_cells, m, k_sub, dim, assigned.count())],
             schema="n_cells int, m int, k_sub int, dim int, n_at_build long",
-        )
-        meta.coalesce(1).write.mode("overwrite").parquet(self._meta_path)
+        ))
         return self
 
     def centroids(self) -> DataFrame:
-        return self.spark.read.parquet(self._centroids_path)
+        return self._read("centroids")
 
     def codebooks(self) -> DataFrame:
-        return self.spark.read.parquet(self._codebooks_path)
+        return self._read("codebooks")
 
     def codes(self) -> DataFrame:
-        """LIVE code rows (tombstoned ids anti-joined out). The
-        ``_cell`` partition filter still prunes through the
-        anti-join."""
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        return tb.filter_live(
-            self.spark, self.path, self.spark.read.parquet(self._codes_path)
-        )
+        """LIVE code rows ``(c_id, _code, _cell)``."""
+        return self._live("codes")
 
     def raw(self) -> DataFrame:
-        """LIVE raw rows (same tombstone filter as :meth:`codes`)."""
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        return tb.filter_live(
-            self.spark, self.path, self.spark.read.parquet(self._raw_path)
-        )
-
-    def meta(self) -> dict:
-        return self.spark.read.parquet(self._meta_path).first().asDict()
-
-    # -- maintenance (round 14, VERDICT r13 #4) -------------------------
-
-    def delete(self, ids, id_col: str = "vec_id") -> int:
-        """Tombstone deletions — immediate via the read anti-joins;
-        bytes reclaimed by :meth:`compact`. Returns newly recorded
-        ids."""
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        return tb.add_tombstones(self.spark, self.path, ids, id_col)
-
-    def compact(self) -> int:
-        """Purge tombstoned rows from codes AND raw behind atomic
-        two-rename swaps (cell partitioning preserved — probes keep
-        pruning), clearing tombstones LAST. Returns live corpus
-        rows."""
-        import os
-
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        if not os.path.isdir(self._raw_path):
-            return 0
-        tb.recover_swap(self._codes_path)
-        tb.recover_swap(self._raw_path)
-        live_raw = self.raw()
-        n = live_raw.count()
-        tb.swap_rewrite(
-            self.spark,
-            self._codes_path,
-            self.codes().repartition("_cell"),
-            ("_cell",),
-        )
-        tb.swap_rewrite(
-            self.spark,
-            self._raw_path,
-            live_raw.repartition("_cell"),
-            ("_cell",),
-        )
-        tb.clear_tombstones(self.spark, self.path)
-        return n
-
-    def deleted_fraction(self) -> float:
-        """Tombstoned share of stored rows — the compaction trigger
-        (build-once class: deletes are its only staleness)."""
-        from timescale_cdc_spark.operators import tombstones as tb
-
-        n_dead = tb.count_tombstones(self.spark, self.path)
-        if not n_dead:
-            return 0.0
-        return n_dead / (self.raw().count() + n_dead)
+        """LIVE raw rows ``(c_id, c_vec, _cell)``."""
+        return self._live("raw")
 
     def topk(
         self,
@@ -612,36 +428,10 @@ class IvfPqIndex:
         q = queries.select(
             F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
         )
-        cell_l2 = F.aggregate(
-            F.zip_with(
-                F.col("q_vec"),
-                F.col("_centroid"),
-                lambda a, b: (a.cast("double") - b)
-                * (a.cast("double") - b),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+        probes = ivf.probe(
+            q, self.centroids(), n_probe, ivf.residual("q_vec").alias("_qres")
         )
-        scored_cells = q.crossJoin(F.broadcast(self.centroids())).withColumn(
-            "_cdist", cell_l2
-        )
-        wp = Window.partitionBy("q_id").orderBy(
-            F.asc("_cdist"), F.asc("_cell")
-        )
-        q_res = F.zip_with(
-            F.col("q_vec"),
-            F.col("_centroid"),
-            lambda a, b: a.cast("double") - b,
-        )
-        probes = (
-            scored_cells.withColumn("_pr", F.row_number().over(wp))
-            .filter(F.col("_pr") <= n_probe)
-            .select("q_id", "q_vec", "_cell", q_res.alias("_qres"))
-        )
-        # partition pruning needs literal cell values at planning time
-        cells = sorted(
-            r["_cell"] for r in probes.select("_cell").distinct().collect()
-        )
+        cells = ivf.probed_cells(probes)
 
         # per-(query, probed cell) LUT from the query RESIDUAL
         sub_dist = F.aggregate(

@@ -1,9 +1,10 @@
-"""Shared delete/tombstone machinery for the persisted ANN indexes
-(round 14, VERDICT r13 #4): a pretraining corpus takes takedowns, so
-the index family (IvfIndex, LshIndex, Sq8Index, IvfSq8Index) needs
+"""Shared delete/tombstone machinery for the persisted ANN indexes: a
+pretraining corpus takes takedowns, so the six index classes
+(IvfIndex, LshIndex, PqIndex, IvfPqIndex, Sq8Index, IvfSq8Index) need
 ``delete`` to take effect immediately and compaction to reclaim the
 bytes later — the Lucene live-docs / FAISS ``remove_ids`` pattern
-re-expressed for a parquet-backed store:
+re-expressed for a parquet-backed store. The six classes call it only
+through their shared base, operators/persisted_index.py:
 
 * ``delete(ids)`` appends the (distinct, not-already-deleted) ids to
   ``<index>/tombstones/`` — an O(|batch|) parquet append, never a

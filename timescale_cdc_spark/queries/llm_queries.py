@@ -1316,17 +1316,17 @@ def c3_ann_lsh_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
       codes; the FAISS billion-scale design, recall-gated like the
       other families so the driver sees its recall signal too.
     - method='sq8': 8-bit scalar quantization (round 10,
-      operators/similarity.py::sq8_topk) — per-dimension int8 codes
+      operators/sq8.py::sq8_topk) — per-dimension int8 codes
       trained from corpus min/max, compressed-domain cosine scan
       (4× less I/O), exact refine of the approx top-50 by id; FAISS's
       SQ8 flat index, recall-gated like the other families.
     - method='sq8_index': the PERSISTED build-once/query-many SQ8
-      variant (round 11, operators/similarity.py::Sq8Index — VERDICT
-      r10 #4): bounds trained and corpus encoded once at build,
+      variant (operators/sq8.py::Sq8Index): bounds
+      trained and corpus encoded once at build,
       repeat query batches read compressed codes off disk; must meet
       the same recall floor from the persisted read path.
     - method='ivf_sq8': IVF + SQ8 with residual encoding (round 11,
-      operators/similarity.py::IvfSq8Index — FAISS's IVF<n>,SQ8):
+      operators/sq8.py::IvfSq8Index — FAISS's IVF<n>,SQ8):
       coarse cells route the scan (partition-pruned to the probed
       cells) and int8 codes cover within-cell RESIDUALS; recall-gated
       like the other families.
@@ -1383,7 +1383,7 @@ def c3_ann_lsh_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("ivfpq").alias("method"), "q_id", "c_id", "cos", "rank"
         )
     )
-    from timescale_cdc_spark.operators.similarity import Sq8Index, sq8_topk
+    from timescale_cdc_spark.operators.sq8 import Sq8Index, sq8_topk
 
     sq8 = sq8_topk(em, q, k=5, rerank=50).select(
         F.lit("sq8").alias("method"), "q_id", "c_id", "cos", "rank"
@@ -1402,7 +1402,7 @@ def c3_ann_lsh_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank",
         )
     )
-    from timescale_cdc_spark.operators.similarity import IvfSq8Index
+    from timescale_cdc_spark.operators.sq8 import IvfSq8Index
 
     ivfsq8_path = scratch_path(sf_dir, "ivfsq8_idx")
     shutil.rmtree(ivfsq8_path, ignore_errors=True)

@@ -7,9 +7,10 @@ corpus" a pretraining deployment actually runs: new documents arrive
 as INSERT envelopes carrying the vector, takedowns arrive as DELETE
 envelopes, and the serving index absorbs both without a rebuild.
 
-Works against any persisted index class with ``append`` + ``delete``
-(IvfIndex, LshIndex, Sq8Index, IvfSq8Index — the PQ classes are
-build-once encoders with no append path, so no sync either).
+Works against any ``PersistedIndex`` (operators/persisted_index.py)
+that has an ``append`` path: IvfIndex, LshIndex, Sq8Index and
+IvfSq8Index. The other two subclasses, PqIndex and IvfPqIndex, are
+build-once encoders with no append path, so no sync either.
 
 Semantics and crash discipline
 ------------------------------
@@ -73,8 +74,9 @@ from timescale_cdc_spark.operators import tombstones as tb
 class IndexCdcSync:
     """Wire a CDC envelope stream into a persisted ANN index.
 
-    ``index``: any of IvfIndex/LshIndex/Sq8Index/IvfSq8Index (needs
-    ``append``, ``delete``, and one of ``corpus``/``raw``/``banded``).
+    ``index``: a ``PersistedIndex`` with ``append`` (IvfIndex,
+    LshIndex, Sq8Index or IvfSq8Index); the sync uses its ``append``,
+    ``delete``, ``live_ids`` and ``path``.
     ``path``: sync state — ``<path>/staged/_batch_id=N`` (parsed
     insert rows) and ``<path>/applied/batch-N`` (markers).
     ``updates``: ``'reject'`` (default) or ``'split'`` — see the
@@ -342,17 +344,7 @@ class IndexCdcSync:
     # -- reconciliation (maintenance cadence) ------------------------------
 
     def _live_ids(self) -> DataFrame:
-        for acc in ("corpus", "raw", "banded"):
-            if hasattr(self.index, acc):
-                return (
-                    getattr(self.index, acc)()
-                    .select(F.col("c_id").alias(self.id_col))
-                    .distinct()
-                )
-        raise TypeError(
-            f"{type(self.index).__name__} exposes none of "
-            f"corpus()/raw()/banded()"
-        )
+        return self.index.live_ids().withColumnRenamed("c_id", self.id_col)
 
     def _sync_deleted(self) -> DataFrame | None:
         """The sync's deleted log as distinct ``(id, _db)`` rows —
