@@ -428,10 +428,10 @@ def test_cascade_never_rewinds_a_committed_watermark(spark, hierarchy):
     )
     far = 1706745600  # 2024-02-01T00:00Z, past every source row
     hourly.refresh(src, start_s=far - 3600, end_s=far)
-    assert hourly._load_manifest()["version"] == 1
-    assert hourly._load_manifest()["regions"] == {}
+    assert hourly.store.load()["version"] == 1
+    assert hourly.store.load()["regions"] == {}
     cascade(levels, src, start_s=0, end_s=1704326400)  # through Jan 3
-    man = hourly._load_manifest()
+    man = hourly.store.load()
     assert man["watermark_s"] == far
     assert man["version"] == 2
     assert _readable(qh(levels, src)) == _readable(_daily_direct(src))
@@ -440,7 +440,7 @@ def test_cascade_never_rewinds_a_committed_watermark(spark, hierarchy):
 def _fail_upper_commit_once(monkeypatch, upper):
     """Make the upper level's next manifest commit raise: the cascade
     stops after the lower level committed and before the upper did."""
-    commit = upper._commit_manifest
+    commit = upper.store.write
     calls = []
 
     def crash_once(manifest):
@@ -449,7 +449,7 @@ def _fail_upper_commit_once(monkeypatch, upper):
             raise RuntimeError("crash between level commits")
         commit(manifest)
 
-    monkeypatch.setattr(upper, "_commit_manifest", crash_once)
+    monkeypatch.setattr(upper.store, "write", crash_once)
     return calls
 
 
@@ -457,7 +457,7 @@ def _assert_manifests_intact(levels):
     for cagg in levels:
         if not cagg.exists():
             continue
-        with open(cagg._manifest_path()) as f:
+        with open(cagg.store.manifest_path) as f:
             man = json.load(f)  # a torn manifest would not parse
         assert set(man) == {"version", "watermark_s", "regions", "history"}
         for src in (man["regions"], man["history"]):
@@ -517,8 +517,8 @@ def test_cascade_crash_between_level_commits_backfill(
     _assert_manifests_intact(crashed)
     for a, b in zip(crashed, control):
         assert a.watermark_s() == b.watermark_s()
-        assert sorted(a._load_manifest()["regions"]) == sorted(
-            b._load_manifest()["regions"]
+        assert sorted(a.store.load()["regions"]) == sorted(
+            b.store.load()["regions"]
         )
         assert _readable(a.materialized()) == _readable(b.materialized())
     assert _readable(query_hierarchy(crashed, d2)) == _readable(

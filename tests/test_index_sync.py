@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from timescale_cdc_spark.catalog import load_table
+from timescale_cdc_spark.durable import SWAP_TMP
 from timescale_cdc_spark.operators.ann_index import IvfIndex
 from timescale_cdc_spark.streaming.harness import (
     run_to_completion,
@@ -453,7 +454,7 @@ def test_cdc_sync_prune_partial_gc_keeps_log_swap_safe(
     # reads still work (w is not deleted, so the log content no
     # longer needs the x row; either shape is correct as long as
     # repair stays honest)
-    assert not os.path.isdir(sync._deleted_path + "._purge_tmp")
+    assert not os.path.isdir(sync._deleted_path + SWAP_TMP)
     assert sync.repair() == 1  # w re-appended
     assert idx.corpus().filter(F.col("c_id") == w).count() == 1
     assert idx.corpus().filter(F.col("c_id") == x).count() == 0

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from timescale_cdc_spark.catalog import load_table
+from timescale_cdc_spark.durable import SWAP_TMP
 from timescale_cdc_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
@@ -3343,10 +3344,10 @@ def test_lsh_index_delete_compact(spark, sf_dir, tmp_path):
 
     # crash debris from an interrupted prior compact must self-heal
     banded_dir = os.path.join(path, "banded")
-    shutil.copytree(banded_dir, banded_dir + "._purge_tmp")
+    shutil.copytree(banded_dir, banded_dir + SWAP_TMP)
     assert idx.compact() == (n_ids - 2) * chunks
     assert not os.path.isdir(_tomb_dir(path))
-    assert not os.path.isdir(banded_dir + "._purge_tmp")
+    assert not os.path.isdir(banded_dir + SWAP_TMP)
     bare = spark.read.parquet(banded_dir)
     assert bare.count() == (n_ids - 2) * chunks
     assert bare.filter(F.col("c_id").isin(victims)).count() == 0

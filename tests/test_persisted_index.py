@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from timescale_cdc_spark.durable import SWAP_OLD, SWAP_TMP
 from timescale_cdc_spark.operators.ann_index import IvfIndex, LshIndex
 from timescale_cdc_spark.operators.pq import IvfPqIndex, PqIndex
 from timescale_cdc_spark.operators.sq8 import IvfSq8Index, Sq8Index
@@ -75,17 +76,17 @@ def test_delete_then_compact_heals_crash_mid_swap(spark, tiny, tmp_path, name):
     assert not {p for p in during if p[1] in victims}
 
     # crash between swap_rewrite's two renames on every data dir: the
-    # live dir is gone, its only copy sits in ._purge_old next to a
-    # half-written ._purge_tmp
+    # live dir is gone, its only copy sits in the SWAP_OLD dir next to
+    # a half-written SWAP_TMP dir
     data_dirs = [os.path.join(path, d) for d in cls.DATA_DIRS]
     for d in data_dirs:
-        os.rename(d, d + "._purge_old")
-        shutil.copytree(d + "._purge_old", d + "._purge_tmp")
+        os.rename(d, d + SWAP_OLD)
+        shutil.copytree(d + SWAP_OLD, d + SWAP_TMP)
 
     assert idx.compact() == (N - 3) * per_id
     for d in data_dirs:
-        assert not os.path.exists(d + "._purge_old")
-        assert not os.path.exists(d + "._purge_tmp")
+        assert not os.path.exists(d + SWAP_OLD)
+        assert not os.path.exists(d + SWAP_TMP)
         bare = spark.read.parquet(d)
         assert bare.count() == (N - 3) * per_id
         assert bare.filter(F.col("c_id").isin(victims)).count() == 0

@@ -12,15 +12,14 @@ expensive aggregation work is amortized into refreshes.
 
 Spark-native design (no Delta in this environment):
 
-* Storage is day-regioned versioned directories behind an atomically
-  replaced JSON manifest — the same crash-safety scheme as
-  cdc/materialize.py: a refresh writes NEW ``d=<date>/v_<gen>``
-  directories (invisible to readers), then one ``os.replace`` commits
-  the manifest; a crash at any point leaves the previous manifest
-  pointing at intact data, and the next refresh garbage-collects
-  orphans. The trailing manifest generation is retained so a reader
-  that resolved paths just before a concurrent commit still sees
-  every directory it captured.
+* Storage is a durable.VersionedRegions store of day regions
+  (``d=<date>/v_<gen>`` behind ``_MANIFEST.json``): a refresh stages
+  NEW region directories (invisible to readers) and one atomic
+  manifest replace commits them; a crash at any point leaves the
+  previous manifest pointing at intact data. The previous
+  generation's region map is retained so a reader that resolved
+  paths just before a concurrent commit still sees every directory
+  it captured.
 * ``refresh(source, start, end)`` recomputes WHOLE buckets inside the
   bucket-aligned window from the source (Timescale semantics:
   ``refresh_continuous_aggregate`` recomputes the window, it does not
@@ -49,17 +48,14 @@ relation connector (cdc-timescale-connector.json:12).
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
+import datetime as dt
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from timescale_cdc_spark.durable import VersionedRegions
 from timescale_cdc_spark.functions.time import bucket_seconds
-
-_MANIFEST = "_MANIFEST.json"
 
 #: signature: () -> list[Column] — fresh aggregate Columns per plan
 AggBuilder = Callable[[], list[Column]]
@@ -85,36 +81,15 @@ class ContinuousAggregate:
         self.ts_col = ts_col
         self.key_cols = list(key_cols)
         self.agg_builder = agg_builder
-        os.makedirs(path, exist_ok=True)
-
-    # -- manifest -----------------------------------------------------
-
-    def _manifest_path(self) -> str:
-        return os.path.join(self.path, _MANIFEST)
-
-    def _load_manifest(self) -> dict:
-        try:
-            with open(self._manifest_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"version": 0, "watermark_s": None, "regions": {},
-                    "history": {}}
-
-    def _commit_manifest(self, manifest: dict) -> None:
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._manifest_path())
+        self.store = VersionedRegions(path, "regions", "d", watermark_s=None)
 
     def exists(self) -> bool:
-        return os.path.exists(self._manifest_path())
+        return self.store.exists()
 
     def watermark_s(self) -> int | None:
         """Epoch-second END of the highest refreshed bucket (None
         before the first refresh)."""
-        return self._load_manifest().get("watermark_s")
+        return self.store.load()["watermark_s"]
 
     # -- bucketing ----------------------------------------------------
 
@@ -197,10 +172,8 @@ class ContinuousAggregate:
         if end_s <= start_s:
             return None
 
-        manifest = self._load_manifest()
+        manifest = self.store.load()
         prev = manifest["regions"]
-        gen = manifest["version"] + 1
-        vname = f"v_{gen:06d}"
 
         window = source.filter(
             (F.col(self.ts_col) >= F.timestamp_seconds(F.lit(start_s)))
@@ -218,9 +191,7 @@ class ContinuousAggregate:
             d for d in prev if self._day_in_window(d, start_s, end_s)
         ]
         if touched:
-            old_paths = [
-                os.path.join(self.path, f"d={d}", prev[d]) for d in touched
-            ]
+            old_paths = [self.store.dir(d, prev[d]) for d in touched]
             carried = (
                 self.spark.read.parquet(*old_paths)
                 .filter(
@@ -230,58 +201,22 @@ class ContinuousAggregate:
                 .withColumn("_d", F.to_date(F.timestamp_seconds("_eb")))
             )
             agged = agged.unionByName(carried)
-        staging = os.path.join(self.path, f"_staging_{vname}")
+        # Days inside the window with NO staged output (all their rows
+        # deleted / none existed) drop out of the manifest.
         (
             agged.repartition("_d")
             .write.mode("overwrite")
             .partitionBy("_d")
-            .parquet(staging)
+            .parquet(self.store.staging(manifest))
         )
-
-        # Move each staged day region to its committed location. Days
-        # inside the window with NO staged output (all their rows
-        # deleted / none existed) drop out of the manifest.
-        new_regions = {
-            d: v
-            for d, v in prev.items()
-            if not self._day_in_window(d, start_s, end_s)
-        }
-        if os.path.exists(staging):
-            for name in sorted(os.listdir(staging)):
-                if not name.startswith("_d="):
-                    continue
-                day = name[len("_d="):]
-                dest = os.path.join(self.path, f"d={day}", vname)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                # A refresh that crashed between this rename and the
-                # manifest commit leaves an UNCOMMITTED dir under the
-                # same (never-committed) generation name; replace it.
-                if os.path.exists(dest):
-                    shutil.rmtree(dest)
-                os.rename(os.path.join(staging, name), dest)
-                new_regions[day] = vname
-            shutil.rmtree(staging, ignore_errors=True)
 
         new_wm = manifest["watermark_s"]
         if new_wm is None or end_s > new_wm:
             new_wm = end_s
-        self._commit_manifest(
-            {
-                "version": gen,
-                "watermark_s": new_wm,
-                "regions": new_regions,
-                # previous generation's mapping, so a reader that
-                # resolved paths just before this commit keeps every
-                # directory it captured
-                "history": prev,
-            }
-        )
-        self._gc()
+        self.store.commit(manifest, touched, watermark_s=new_wm)
         return start_s, end_s
 
     def _day_in_window(self, day: str, start_s: int, end_s: int) -> bool:
-        import datetime as dt
-
         d0 = dt.datetime.strptime(day, "%Y-%m-%d").replace(
             tzinfo=dt.timezone.utc
         )
@@ -289,41 +224,13 @@ class ContinuousAggregate:
         day_end = day_start + 86400
         return day_start < end_s and day_end > start_s
 
-    def _gc(self) -> None:
-        """Delete version directories referenced by neither the current
-        manifest nor the retained previous generation (crash orphans
-        and superseded regions)."""
-        manifest = self._load_manifest()
-        keep: set[tuple[str, str]] = set()
-        for src in (manifest.get("regions", {}), manifest.get("history", {})):
-            for day, v in src.items():
-                keep.add((day, v))
-        for name in os.listdir(self.path):
-            if name.startswith("_staging_"):
-                shutil.rmtree(os.path.join(self.path, name),
-                              ignore_errors=True)
-                continue
-            if not name.startswith("d="):
-                continue
-            day = name[len("d="):]
-            ddir = os.path.join(self.path, name)
-            for v in os.listdir(ddir):
-                if (day, v) not in keep:
-                    shutil.rmtree(os.path.join(ddir, v), ignore_errors=True)
-            if not os.listdir(ddir):
-                os.rmdir(ddir)
-
     # -- read ---------------------------------------------------------
 
     def materialized(self) -> DataFrame:
         """The materialized aggregate rows (explicit committed paths —
         no directory listing races, region-granular pruning by
         construction)."""
-        manifest = self._load_manifest()
-        paths = [
-            os.path.join(self.path, f"d={day}", v)
-            for day, v in sorted(manifest["regions"].items())
-        ]
+        paths = self.store.paths()
         if not paths:
             raise ValueError(f"continuous aggregate at {self.path} is empty")
         return self.spark.read.parquet(*paths).drop("_d")
@@ -378,7 +285,7 @@ class ContinuousAggregate:
         # materialized(∅) ∪ tail(>= wm) would silently drop everything
         # below the watermark. With nothing materialized, aggregate
         # the full source instead.
-        if wm is None or not self._load_manifest()["regions"]:
+        if wm is None or not self.store.load()["regions"]:
             return self._aggregate(source).drop("_eb")
         mat = self.materialized().filter(F.col("_eb") < F.lit(wm))
         tail = source.filter(
@@ -427,7 +334,7 @@ def cascade_refresh(
     until the next cascade.
 
     Crash contract: every level commits through its own
-    :meth:`ContinuousAggregate.refresh` (one ``os.replace`` manifest
+    :meth:`ContinuousAggregate.refresh` (one atomic manifest
     write), lower level first, so an upper level never claims a
     watermark its lower level has not reached. A crash between two
     commits leaves the upper level lagging — its previous manifest

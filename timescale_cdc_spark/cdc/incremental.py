@@ -22,12 +22,13 @@ when ts maps to event_date partitions.
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from timescale_cdc_spark.durable import read_json, write_json
 
 
 @dataclass
@@ -49,19 +50,14 @@ class IncrementalPoller:
         self._offset = self._load() or Offset(ts=start_ts, event_id=0)
 
     def _load(self) -> Offset | None:
-        try:
-            with open(self.state_path) as f:
-                d = json.load(f)
-            return Offset(ts=d["ts"], event_id=int(d["event_id"]))
-        except (OSError, ValueError, KeyError):
+        d = read_json(self.state_path)
+        if d is None:
             return None
+        return Offset(ts=d["ts"], event_id=int(d["event_id"]))
 
     def _commit(self, off: Offset) -> None:
-        tmp = self.state_path + ".tmp"
         os.makedirs(os.path.dirname(self.state_path) or ".", exist_ok=True)
-        with open(tmp, "w") as f:
-            json.dump({"ts": off.ts, "event_id": off.event_id}, f)
-        os.replace(tmp, self.state_path)
+        write_json(self.state_path, {"ts": off.ts, "event_id": off.event_id})
 
     @property
     def offset(self) -> Offset:

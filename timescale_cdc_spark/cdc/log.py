@@ -25,12 +25,12 @@ global sort. Reads are partition-pruned by event_date.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from timescale_cdc_spark.durable import read_json, write_json
 from timescale_cdc_spark.schemas import EVENT_LOG_SCHEMA
 
 _WATERMARK_FILE = "_event_id_watermark.json"
@@ -69,17 +69,11 @@ class EventLog:
         return os.path.join(self.path, _WATERMARK_FILE)
 
     def last_event_id(self) -> int:
-        try:
-            with open(self._watermark_path()) as f:
-                return int(json.load(f)["last_event_id"])
-        except (OSError, ValueError, KeyError):
-            return 0
+        state = read_json(self._watermark_path(), {"last_event_id": 0})
+        return int(state["last_event_id"])
 
     def _commit_watermark(self, last_id: int) -> None:
-        tmp = self._watermark_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"last_event_id": last_id}, f)
-        os.replace(tmp, self._watermark_path())
+        write_json(self._watermark_path(), {"last_event_id": last_id})
 
     # -- write path ----------------------------------------------------------
 

@@ -20,6 +20,14 @@ import os
 import shutil
 
 from timescale_cdc_spark.cdc.log import EventLog
+from timescale_cdc_spark.durable import (
+    SWAP_OLD,
+    SWAP_TMP,
+    read_json,
+    recover_swap,
+    swap_rewrite,
+    write_json,
+)
 
 
 def _partition_dates(log: EventLog) -> list[dt.date]:
@@ -56,24 +64,6 @@ def apply_retention(
     return dropped
 
 
-def _recover_dir(part: str) -> bool:
-    """Self-heal a partition leaf dir left half-swapped by a crashed
-    compaction: if the live dir is missing but a ``._compact_old``
-    survivor exists, restore it; stale tmp/old leftovers next to an
-    intact live dir are swept. Returns True if a restore happened."""
-    old = part + "._compact_old"
-    tmp = part + "._compact_tmp"
-    restored = False
-    if not os.path.isdir(part) and os.path.isdir(old):
-        os.rename(old, part)  # crash happened between the two renames
-        restored = True
-    if os.path.isdir(part):
-        for leftover in (old, tmp):
-            if os.path.isdir(leftover):
-                shutil.rmtree(leftover)
-    return restored
-
-
 def _dir_bytes(part: str) -> int:
     total = 0
     for root, _dirs, files in os.walk(part):
@@ -93,8 +83,9 @@ def _rewrite_dir(
 ) -> tuple[int, int, int]:
     """Rewrite one partition LEAF dir into ``target_files`` files
     sorted by ``sort_cols`` (optionally re-encoded with ``codec``)
-    behind the atomic two-rename swap; recovers a half-swapped crash
-    state first. Returns (rows, bytes_before, bytes_after).
+    behind the atomic two-rename swap (durable.swap_rewrite); recovers
+    a half-swapped crash state first. Returns (rows, bytes_before,
+    bytes_after).
 
     ``zkey_fn`` (round 10): a callable ``df -> Column`` producing the
     z-order sort key; when given, the leaf is range-partitioned and
@@ -102,13 +93,12 @@ def _rewrite_dir(
     Morton key across the leaf's output files).
     ``max_records_per_file`` bounds rows per file — the z-order
     pruning granularity knob."""
-    _recover_dir(part)
+    recover_swap(part)
     if not os.path.isdir(part):
         return 0, 0, 0
     df = log.spark.read.parquet(part)
     n = df.count()
     b0 = _dir_bytes(part)
-    tmp = part + "._compact_tmp"
     if zkey_fn is not None:
         out = (
             df.withColumn("_zk", zkey_fn(df))
@@ -118,18 +108,13 @@ def _rewrite_dir(
         )
     else:
         out = df.coalesce(target_files).sortWithinPartitions(*sort_cols)
-    writer = out.write.mode("overwrite")
+    writer = out.write
     if codec:
         writer = writer.option("compression", codec)
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(tmp)
-    b1 = _dir_bytes(tmp)
-    old = part + "._compact_old"
-    os.rename(part, old)
-    os.rename(tmp, part)
-    shutil.rmtree(old)
-    return n, b0, b1
+    swap_rewrite(part, writer)
+    return n, b0, _dir_bytes(part)
 
 
 _LOG_SORT = ["schema_name", "table_name", "ts", "event_id"]
@@ -147,13 +132,7 @@ _LAYOUT_MANIFEST = "_layout.json"
 def read_layout(part: str) -> dict | None:
     """The committed layout manifest of a date-partition dir, or None
     (never written / legacy chunk / swept by a re-sort)."""
-    import json
-
-    try:
-        with open(os.path.join(part, _LAYOUT_MANIFEST)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
+    return read_json(os.path.join(part, _LAYOUT_MANIFEST))
 
 
 def _commit_layout(part: str, manifest: dict) -> None:
@@ -163,12 +142,7 @@ def _commit_layout(part: str, manifest: dict) -> None:
     no/stale manifest with new data, in which case the next run simply
     recomputes bounds and rewrites (idempotent — the same
     crash-at-any-point contract as the compaction swap itself)."""
-    import json
-
-    tmp = os.path.join(part, _LAYOUT_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(part, _LAYOUT_MANIFEST))
+    write_json(os.path.join(part, _LAYOUT_MANIFEST), manifest)
 
 
 def _compact_dir(log: EventLog, part: str, target_files: int) -> int:
@@ -187,7 +161,7 @@ def _leaf_dirs(date_dir: str) -> list[str]:
         os.path.join(date_dir, name)
         for name in os.listdir(date_dir)
         if name.startswith("event_hour=")
-        and "._compact_" not in name
+        and not name.endswith((SWAP_OLD, SWAP_TMP))
         and os.path.isdir(os.path.join(date_dir, name))
     )
     return hours or [date_dir]
@@ -196,24 +170,25 @@ def _leaf_dirs(date_dir: str) -> list[str]:
 def _recover_leaves(date_dir: str) -> bool:
     """Restore hour leaves whose live dir was lost to a crash between
     _compact_dir's two renames: each ``*._compact_old`` survivor names
-    the missing leaf — strip the suffix and _recover_dir the real path
+    the missing leaf — strip the suffix and recover_swap the real path
     (restores the live dir and sweeps tmp debris)."""
     restored = False
     for name in os.listdir(date_dir):
-        if name.endswith("._compact_old"):
-            leaf = os.path.join(date_dir, name[: -len("._compact_old")])
-            restored = _recover_dir(leaf) or restored
+        if name.endswith(SWAP_OLD):
+            leaf = os.path.join(date_dir, name[: -len(SWAP_OLD)])
+            restored = recover_swap(leaf) or restored
     return restored
 
 
 def recover_partition(log: EventLog, date: dt.date) -> bool:
-    """Self-heal every leaf of a date partition (see _recover_dir)."""
+    """Self-heal every leaf of a date partition (see
+    durable.recover_swap)."""
     part = os.path.join(log.data_path, f"event_date={date.isoformat()}")
-    restored = _recover_dir(part)
+    restored = recover_swap(part)
     if os.path.isdir(part):
         restored = _recover_leaves(part) or restored
         for leaf in _leaf_dirs(part):
-            restored = _recover_dir(leaf) or restored
+            restored = recover_swap(leaf) or restored
     return restored
 
 
@@ -227,7 +202,7 @@ def compact_partition(log: EventLog, date: dt.date, target_files: int = 1) -> in
     first (_recover_leaves) so it is compacted under its real name,
     never as ``._compact_old`` debris."""
     part = os.path.join(log.data_path, f"event_date={date.isoformat()}")
-    _recover_dir(part)
+    recover_swap(part)
     if not os.path.isdir(part):
         return 0
     _recover_leaves(part)
@@ -288,7 +263,7 @@ def compress_partition(
     "bounds", "bounds_source"}.
     """
     part = os.path.join(log.data_path, f"event_date={date.isoformat()}")
-    _recover_dir(part)
+    recover_swap(part)
     if not os.path.isdir(part):
         return {"rows": 0, "bytes_before": 0, "bytes_after": 0}
     _recover_leaves(part)

@@ -3,11 +3,9 @@ gates (curation.StreamingNearDedup and ann_index.StreamingVectorDedup).
 
 Both gates persist per-batch banded sketch rows and look incoming
 batches up against the admitted corpus. The storage/lookup layer is
-IDENTICAL up to column names, so it lives here once — the round-6
-advice cycle showed exactly what diverging copies of this kind of
-directory bookkeeping cost (the IvfIndex compaction crash-recovery
-bug existed only because retention.py's correct version was
-re-implemented instead of reused).
+IDENTICAL up to column names, so it lives here once; its meta files
+are written and read through durable.py, the one home of the
+engine's crash-safe file handling.
 
 Layout (see StreamingNearDedup's docstring for the full cost model):
 
@@ -45,6 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from timescale_cdc_spark.durable import read_json, write_json
 
 
 class BandedIndexStore:
@@ -90,14 +90,10 @@ class BandedIndexStore:
         )
 
     def _gen_meta(self, gen_dir: str) -> dict:
-        import json
         import os
 
         p = os.path.join(self._base_path, gen_dir, "_meta.json")
-        if not os.path.isfile(p):
-            return {}
-        with open(p) as f:
-            return json.load(f)
+        return read_json(p, {})
 
     def _batch_schema(self):
         from pyspark.sql import types as T
@@ -128,27 +124,24 @@ class BandedIndexStore:
         what survived — a high-duplicate stream admits few docs per
         large batch, and estimating from admitted rows would pick a
         fine layout whose every bulk lookup degrades to a full scan."""
-        import json
         import os
 
         d = os.path.join(self.index_path, f"ingest_batch={batch_id}")
         if os.path.isdir(d):
-            with open(os.path.join(d, "_meta.json"), "w") as f:
-                json.dump({"batch_docs": n_docs}, f)
+            write_json(os.path.join(d, "_meta.json"), {"batch_docs": n_docs})
 
     def _batch_sizes(self) -> list[float]:
         """Incoming docs per current batch dir (recorded meta;
         admitted-rows fallback for dirs predating the meta)."""
-        import json
         import os
 
         sizes: list[float] = []
         fallback_dirs = []
         for name in self._batch_dirs():
             p = os.path.join(self.index_path, name, "_meta.json")
-            if os.path.isfile(p):
-                with open(p) as f:
-                    sizes.append(float(json.load(f)["batch_docs"]))
+            meta = read_json(p)
+            if meta is not None:
+                sizes.append(float(meta["batch_docs"]))
             else:
                 fallback_dirs.append(name)
         if fallback_dirs:
@@ -322,7 +315,6 @@ class BandedIndexStore:
         leaves reads filtered/correct and the next compact finishes
         the job), and outstanding tombstones force a compaction even
         when the directory count alone wouldn't."""
-        import json
         import os
         import shutil
 
@@ -404,8 +396,7 @@ class BandedIndexStore:
         meta: dict = {"prefix_mod": mod}
         if batch_est is not None:
             meta["batch_est"] = batch_est
-        with open(os.path.join(gdir, "_meta.json"), "w") as f:
-            json.dump(meta, f)
+        write_json(os.path.join(gdir, "_meta.json"), meta)
         for name in batch_dirs:
             shutil.rmtree(
                 os.path.join(self.index_path, name), ignore_errors=True

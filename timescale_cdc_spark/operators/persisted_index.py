@@ -9,8 +9,8 @@ local-codec split. Each class keeps its own build, append and topk
 * the LIVE read: each data dir is read through the tombstone
   anti-join (tombstones.py), so a :meth:`delete` takes effect at once;
 * :meth:`compact`: recover every data dir from a crashed swap FIRST,
-  then rewrite each dir minus the tombstoned ids behind the atomic
-  two-rename swap, then clear the tombstones LAST;
+  then rewrite each dir minus the tombstoned ids behind durable.py's
+  atomic two-rename swap, then clear the tombstones LAST;
 * the id-level :meth:`deleted_fraction` and the shared part of each
   ``staleness()`` report.
 
@@ -26,6 +26,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from timescale_cdc_spark.durable import recover_swap, swap_rewrite
 from timescale_cdc_spark.operators import tombstones as tb
 
 
@@ -92,7 +93,7 @@ class PersistedIndex:
         (0 for an unbuilt index)."""
         dirs = [self._dir(d) for d in self.DATA_DIRS]
         for d in dirs:
-            tb.recover_swap(d)
+            recover_swap(d)
         if not all(os.path.isdir(d) for d in dirs):
             return 0
         n = self._live(self.DATA_DIRS[0]).count()
@@ -100,7 +101,8 @@ class PersistedIndex:
             live = self._live(name)
             if self.PARTITION_BY:
                 live = live.repartition(*self.PARTITION_BY)
-            tb.swap_rewrite(self.spark, d, live, self.PARTITION_BY)
+            swap_rewrite(d, live.write.partitionBy(*self.PARTITION_BY))
+            self.spark.catalog.refreshByPath(d)
         tb.clear_tombstones(self.spark, self.path)
         return n
 

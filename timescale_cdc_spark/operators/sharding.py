@@ -42,12 +42,12 @@ nothing driver-side beyond the n_shards-row manifest.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from timescale_cdc_spark.durable import read_json, write_json
 from timescale_cdc_spark.operators.sampling import (
     HASH_SPACE,
     det_hash,
@@ -256,18 +256,13 @@ def write_shards(
         "digest_chunk_rows": digest_chunk_rows,
         "shards": shards,
     }
-    tmp = os.path.join(path, _MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(path, _MANIFEST))
+    write_json(os.path.join(path, _MANIFEST), manifest)
     return manifest
 
 
 def read_shard_manifest(path: str) -> dict | None:
-    try:
-        with open(os.path.join(path, _MANIFEST)) as f:
-            m = json.load(f)
-    except (OSError, ValueError):
+    m = read_json(os.path.join(path, _MANIFEST))
+    if m is None:
         return None
     m["shards"] = {int(k): v for k, v in m["shards"].items()}
     return m

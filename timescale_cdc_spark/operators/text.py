@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from timescale_cdc_spark.durable import read_json, write_json
+
 #: Tiny per-language marker-word profiles (top function words) for the
 #: n-gram/stopword language-ID heuristic. Deliberately small — the
 #: operator's job is the scoring machinery; profiles are swappable.
@@ -366,7 +368,6 @@ def unigram_logprobs(
     next call refits). The caller owns the path's lifecycle/staleness
     — key it by the corpus identity (the registered entries key by
     (sf, pid) via scratch_path)."""
-    import json
     import math
     import os
 
@@ -376,9 +377,8 @@ def unigram_logprobs(
         if artifact_path
         else None
     )
-    if manifest and os.path.exists(manifest):
-        with open(manifest) as f:
-            meta = json.load(f)
+    meta = read_json(manifest) if manifest else None
+    if meta is not None:
         return (
             spark.read.parquet(os.path.join(artifact_path, "lm")),
             float(meta["oov_logp"]),
@@ -418,14 +418,9 @@ def unigram_logprobs(
     if artifact_path:
         lm_dir = os.path.join(artifact_path, "lm")
         lm.write.mode("overwrite").parquet(lm_dir)
-        tmp = manifest + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"oov_logp": oov_logp, "denom": denom, "v": row["v"]}, f
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, manifest)
+        write_json(
+            manifest, {"oov_logp": oov_logp, "denom": denom, "v": row["v"]}
+        )
         # hand back the artifact scan: the write above already
         # consumed the persisted counts (released here — nothing will
         # read them again), and future consumers read the compact

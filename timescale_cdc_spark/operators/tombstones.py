@@ -14,9 +14,10 @@ through their shared base, operators/persisted_index.py:
   below the corpus, so the join broadcasts; when no tombstone dir
   exists the accessor returns the bare scan, zero overhead);
 * ``compact()`` physically rewrites the data dirs MINUS tombstoned
-  rows behind an atomic two-rename swap and clears the tombstone dir
-  LAST — a crash anywhere mid-purge leaves the tombstones in place,
-  reads stay filtered/correct, and the next compact finishes the job.
+  rows behind durable.py's atomic two-rename swap and clears the
+  tombstone dir LAST — a crash anywhere mid-purge leaves the
+  tombstones in place, reads stay filtered/correct, and the next
+  compact finishes the job.
 
 Single-writer contract for delete/compact, like all maintenance on
 these indexes.
@@ -32,8 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _TOMB = "tombstones"
-_OLD = "._purge_old"
-_TMP = "._purge_tmp"
 
 
 def tombstones_path(base: str) -> str:
@@ -120,45 +119,3 @@ def clear_tombstones(spark: SparkSession, base: str) -> None:
     if os.path.isdir(p):
         shutil.rmtree(p)
         spark.catalog.refreshByPath(p)
-
-
-def recover_swap(data_dir: str) -> bool:
-    """Self-heal a data dir left half-swapped by a crashed
-    :func:`swap_rewrite` (same two-rename discipline as
-    cdc/retention.py::_recover_dir, whole-table granularity):
-    restore the ``._purge_old`` survivor if the live dir vanished,
-    sweep stale tmp/old debris otherwise."""
-    old = data_dir + _OLD
-    tmp = data_dir + _TMP
-    restored = False
-    if not os.path.isdir(data_dir) and os.path.isdir(old):
-        os.rename(old, data_dir)
-        restored = True
-    if os.path.isdir(data_dir):
-        for leftover in (old, tmp):
-            if os.path.isdir(leftover):
-                shutil.rmtree(leftover)
-    return restored
-
-
-def swap_rewrite(
-    spark: SparkSession,
-    data_dir: str,
-    df: DataFrame,
-    partition_by: tuple[str, ...] = (),
-) -> None:
-    """Rewrite ``data_dir`` to hold exactly ``df`` behind the atomic
-    two-rename swap. ``df`` may READ from ``data_dir`` (the write
-    lands in the tmp sibling, so the source stays intact until the
-    final renames)."""
-    recover_swap(data_dir)
-    tmp = data_dir + _TMP
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
-    old = data_dir + _OLD
-    os.rename(data_dir, old)
-    os.rename(tmp, data_dir)
-    shutil.rmtree(old)
-    spark.catalog.refreshByPath(data_dir)

@@ -68,6 +68,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from timescale_cdc_spark.durable import recover_swap, swap_rewrite
 from timescale_cdc_spark.operators import tombstones as tb
 
 
@@ -352,10 +353,10 @@ class IndexCdcSync:
         log-ahead record repair/prune consult so an index compact —
         which clears the index's tombstones — can never erase the
         fact that a staged id was later taken down."""
-        # heal a GC rewrite interrupted mid-swap (tombstones.py's
+        # heal a GC rewrite interrupted mid-swap (durable.py's
         # two-rename discipline; losing this log reopens the
         # resurrection window the log exists to close)
-        tb.recover_swap(self._deleted_path)
+        recover_swap(self._deleted_path)
         if not os.path.isdir(self._deleted_path):
             return None
         return self.spark.read.parquet(self._deleted_path).select(
@@ -499,7 +500,7 @@ class IndexCdcSync:
         # only exists to keep repair() honest about staged ids; once
         # a batch's staging is pruned, its deletions are fully
         # reconciled history). The rewrite goes through the atomic
-        # two-rename swap (tombstones.swap_rewrite) — a plain
+        # two-rename swap (durable.swap_rewrite) — a plain
         # overwrite deletes-then-writes, and a crash in that window
         # would lose the log and reopen the resurrection window.
         if sync_dead is not None:
@@ -514,7 +515,8 @@ class IndexCdcSync:
                     self.id_col,
                     "left_semi",
                 )
-                tb.swap_rewrite(self.spark, self._deleted_path, still)
+                swap_rewrite(self._deleted_path, still.write)
+                self.spark.catalog.refreshByPath(self._deleted_path)
         return removed
 
     def lag(self) -> dict:
